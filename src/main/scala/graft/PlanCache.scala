@@ -37,12 +37,20 @@ object PlanCache {
     entries.getOrElseUpdate((sid(spark), key),
       build.persist(StorageLevel.MEMORY_AND_DISK))
 
-  /** Unpersist and drop every entry this session pinned. Blocking=false:
+  /** Unpersist and drop every entry this session pinned, and the
+    * session's resolved relations in [[Tables]]. Blocking=false:
     * eviction proceeds asynchronously, callers don't wait on it. */
   def clear(spark: SparkSession): Unit = {
     val s = sid(spark)
     entries.keys.filter(_._1 == s).foreach { k =>
       entries.remove(k).foreach(_.unpersist(blocking = false))
     }
+    Tables.clear(spark)
+  }
+
+  /** Entries this session holds (PlanCacheSpec checks the release). */
+  private[graft] def size(spark: SparkSession): Int = {
+    val s = sid(spark)
+    entries.keys.count(_._1 == s)
   }
 }

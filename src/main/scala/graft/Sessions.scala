@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
   * Explain, StreamDemo, tests): local[min(cpus,32)] with
   * shuffle.partitions = threads, UTC, and the nanos-timestamp read flag
   * set at BUILD time — so reading `events.parquet` is order-independent
-  * (no hidden conf mutation required first; see Tables.events). */
+  * (no hidden conf mutation required first; see Tables.events). Every
+  * streaming query's checkpoint goes through
+  * [[graft.streaming.LocalCheckpointFileManager]]. */
 object Sessions {
   def defaultCpus: Int = math.min(Runtime.getRuntime.availableProcessors, 32)
 
@@ -17,5 +19,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(graft.streaming.LocalCheckpointFileManager.ConfKey,
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
       .getOrCreate()
 }

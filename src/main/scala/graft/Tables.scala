@@ -30,11 +30,25 @@ object Tables {
   private val resolved =
     scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val sid = org.apache.spark.sql.graft.bridge.sessionUUID(spark)
-    resolved.getOrElseUpdate((sid, s"$dir/$name.parquet"),
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    resolved.getOrElseUpdate((sid(spark), s"$dir/$name.parquet"),
       spark.read.parquet(s"$dir/$name.parquet"))
+
+  /** Drop every resolved relation this session holds; `PlanCache.clear`
+    * calls it, so a session's two caches are released together. */
+  def clear(spark: SparkSession): Unit = {
+    val s = sid(spark)
+    resolved.keys.filter(_._1 == s).foreach(resolved.remove)
   }
+
+  /** Entries this session holds (PlanCacheSpec checks the release). */
+  private[graft] def size(spark: SparkSession): Int = {
+    val s = sid(spark)
+    resolved.keys.count(_._1 == s)
+  }
+
+  private def sid(spark: SparkSession): String =
+    org.apache.spark.sql.graft.bridge.sessionUUID(spark)
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

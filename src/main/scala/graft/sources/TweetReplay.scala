@@ -5,8 +5,9 @@ import java.util.Optional
 
 import scala.collection.JavaConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -16,6 +17,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** S1 as a REAL DataSource V2 micro-batch source (VERDICT r16 ask #3):
   * `spark.readStream.format("tweet-replay").option("path", dir)` replays
@@ -49,6 +51,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * up (append-only directory contract: replay files are never mutated
   * in place, matching the immutable-blob layout every object store
   * enforces anyway).
+  *
+  * The session's Hadoop conf is taken once per stream: the driver lists
+  * through one `FileSystem`, and the readers get the same conf as one
+  * broadcast. A `new Configuration()` per listing or reader re-parsed
+  * the default XML resources each time (~8 ms, three listings a trigger).
   */
 class TweetReplaySource extends TableProvider with DataSourceRegister {
 
@@ -86,7 +93,7 @@ private[sources] class TweetReplayTable(props: Map[String, String])
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = TweetReplaySource.WireSchema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new TweetReplayMicroBatchStream(path,
+          new TweetReplayMicroBatchStream(SparkSession.active, path,
             maxFilesPerTrigger =
               options.getInt("maxFilesPerTrigger", Int.MaxValue),
             stopAtFile = Option(options.get("stopAtFile")).map(_.toInt))
@@ -103,21 +110,30 @@ private[sources] case class TweetReplayOffset(fileIdx: Int) extends Offset {
 }
 
 private[sources] class TweetReplayMicroBatchStream(
-    path: String, maxFilesPerTrigger: Int, stopAtFile: Option[Int])
+    spark: SparkSession, path: String, maxFilesPerTrigger: Int, stopAtFile: Option[Int])
   extends MicroBatchStream with SupportsAdmissionControl {
+
+  private val hadoopConf = org.apache.spark.sql.graft.bridge.newHadoopConf(spark)
+  private val dir = new HPath(path)
+  private val fs = dir.getFileSystem(hadoopConf)
+  private lazy val readerConf: Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf))
 
   /** Lexicographic listing of payload files (names only — contents are
     * executor-side). Re-listed per poll; the sort makes the index→file
     * map deterministic across restarts as long as the directory is
     * append-only (enforced contract, see class doc). */
-  private def listFiles(): Seq[String] = {
-    val p = new HPath(path)
-    val fs = p.getFileSystem(new Configuration())
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
+  private def listFiles(): Seq[String] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
         !s.getPath.getName.startsWith("_"))
       .map(_.getPath.toString).sorted
+
+  /** Files the stream may deliver: the listing, capped at `stopAtFile`. */
+  private def available(): Int = {
+    val n = listFiles().size
+    stopAtFile.fold(n)(math.min(_, n))
   }
 
   override def initialOffset(): Offset = TweetReplayOffset(0)
@@ -134,7 +150,7 @@ private[sources] class TweetReplayMicroBatchStream(
       "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val avail = stopAtFile.fold(listFiles().size)(math.min(_, listFiles().size))
+    val avail = available()
     val from = start.asInstanceOf[TweetReplayOffset].fileIdx
     val step: Long = limit match {
       case l: org.apache.spark.sql.connector.read.streaming.ReadMaxRows =>
@@ -144,9 +160,7 @@ private[sources] class TweetReplayMicroBatchStream(
     TweetReplayOffset(math.min(avail.toLong, from.toLong + step).toInt)
   }
 
-  override def reportLatestOffset(): Offset =
-    TweetReplayOffset(stopAtFile.fold(listFiles().size)(
-      math.min(_, listFiles().size)))
+  override def reportLatestOffset(): Offset = TweetReplayOffset(available())
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[TweetReplayOffset].fileIdx
@@ -160,7 +174,7 @@ private[sources] class TweetReplayMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new TweetReplayReaderFactory
+    new TweetReplayReaderFactory(readerConf)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -169,12 +183,13 @@ private[sources] class TweetReplayMicroBatchStream(
 private[sources] case class TweetReplayInputPartition(file: String)
   extends InputPartition
 
-private[sources] class TweetReplayReaderFactory extends PartitionReaderFactory {
+private[sources] class TweetReplayReaderFactory(
+    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val file = partition.asInstanceOf[TweetReplayInputPartition].file
     new PartitionReader[InternalRow] {
       private val p = new HPath(file)
-      private val in = p.getFileSystem(new Configuration()).open(p)
+      private val in = p.getFileSystem(conf.value.value).open(p)
       private val lines = new java.io.BufferedReader(
         new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
       private var line: String = _

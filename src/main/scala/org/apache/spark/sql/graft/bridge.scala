@@ -49,6 +49,11 @@ object bridge {
   def sessionUUID(spark: org.apache.spark.sql.SparkSession): String =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
 
+  /** The session's Hadoop conf (the shared one plus the session's SQL
+    * confs), what Spark's own file sources list and read with. */
+  def newHadoopConf(spark: org.apache.spark.sql.SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
+
   /** Runtime function registration on an existing session (the
     * spark.sql.extensions config path needs the session to be built with
     * it; this covers already-built sessions). */

@@ -547,6 +547,17 @@ class EventAnalyticsSpec extends SparkSpec {
       .select("user_id").distinct().count())
   }
 
+  test("rolling active users and stickiness reject a non-positive windowDays") {
+    // a window of 0 or -1 days would explode `sequence(day, day - 1)`
+    // backwards and count users into past days
+    for (w <- Seq(0, -1)) {
+      intercept[IllegalArgumentException](
+        EventAnalytics.rollingActiveUsers(spark, sf0001, windowDays = w))
+      intercept[IllegalArgumentException](
+        EventAnalytics.stickiness(spark, sf0001, windowDays = w))
+    }
+  }
+
   test("rolling active users: window-1 equals DAU, window-7 dominates it, bounded by total") {
     import org.apache.spark.sql.functions._
     val dau = EventAnalytics.rollingActiveUsers(spark, sf0001, windowDays = 1)

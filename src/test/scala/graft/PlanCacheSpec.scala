@@ -39,4 +39,19 @@ class PlanCacheSpec extends SparkSpec {
       PlanCache.clear(s2)
     }
   }
+
+  test("clear releases a session's PlanCache seams and Tables relations together") {
+    // cycle sessions the way a server (or the cold benchmark) does: each
+    // fills both caches, then clear must shrink both back to nothing
+    for (_ <- 0 until 3) {
+      val s = spark.newSession()
+      Tables.table(s, sf0001, "region")
+      Tables.events(s, sf0001)
+      PlanCache.cached(s, "sig")(s.range(5).toDF("n"))
+      assert(Tables.size(s) == 2 && PlanCache.size(s) == 1)
+      PlanCache.clear(s)
+      assert(Tables.size(s) == 0, "PlanCache.clear must release Tables.resolved")
+      assert(PlanCache.size(s) == 0)
+    }
+  }
 }

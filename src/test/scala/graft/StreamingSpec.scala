@@ -2347,4 +2347,43 @@ class StreamingSpec extends SparkSpec {
     assert(all.count() == 5L && all.select("text").distinct().count() == 5L,
       "every payload exactly once across the restart")
   }
+
+  test("a checkpoint written by Spark's default manager resumes under graft's, no reprocessing") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.streaming.checkpointing.{
+      CheckpointFileManager, FileContextBasedCheckpointFileManager}
+    val src = Files.createTempDirectory("graft_cfm_resume").toString
+    val out = Files.createTempDirectory("graft_cfm_resume_out").toString
+    val chk = Files.createTempDirectory("graft_cfm_resume_chk").toString
+    writeReplayFiles(src)
+    val stock = spark.newSession()
+    stock.conf.set(graft.streaming.LocalCheckpointFileManager.ConfKey,
+      classOf[FileContextBasedCheckpointFileManager].getName)
+    def managerOf(s: org.apache.spark.sql.SparkSession) =
+      CheckpointFileManager.create(new Path(chk),
+        org.apache.spark.sql.graft.bridge.newHadoopConf(s)).getClass
+    assert(managerOf(stock) == classOf[FileContextBasedCheckpointFileManager])
+    assert(managerOf(spark) == classOf[graft.streaming.LocalCheckpointFileManager])
+
+    // stateful: one row per distinct lang, so run 2 can only emit nothing
+    // if it recovered run 1's dedup state
+    def runOnce(s: org.apache.spark.sql.SparkSession, extra: Map[String, String]): Long = {
+      val spec = Pipeline.SourceSpec("tweet-replay", path = Some(src),
+        options = Map("maxFilesPerTrigger" -> "1") ++ extra)
+      val q = Pipeline.readTweets(s, spec).dropDuplicates("lang")
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", chk).outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+      q.recentProgress.map(_.numInputRows).sum
+    }
+    // run 1, default manager: f00+f01 carry en, en, es
+    assert(runOnce(stock, Map("stopAtFile" -> "2")) == 3L)
+    assert(spark.read.parquet(out).count() == 2L)
+    // run 2, graft's manager on the same checkpoint: only f02/f03 (en, en)
+    // are read, and the recovered state drops both
+    assert(runOnce(spark, Map.empty) == 2L, "restart must resume at file 2")
+    val langs = spark.read.parquet(out).select("lang").collect().map(_.getString(0)).sorted
+    assert(langs.toSeq == Seq("en", "es"), s"state lost across the manager switch: $langs")
+  }
 }
+
