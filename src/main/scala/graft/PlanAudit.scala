@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 /** Programmatic scale-red-flag audit of a DataFrame's physical plan —
   * the same checks PlanAuditSpec sweeps every declared query with,
@@ -56,14 +59,37 @@ object PlanAudit {
     * and leaked cached work into this query's counts (q217 showed 39
     * phantom scans). Walking the node tree makes the cache boundary
     * structural: InMemoryTableScan is a leaf. */
-  private def planLines(df: DataFrame)
-      : Seq[(org.apache.spark.sql.execution.SparkPlan, String)] =
+  private def planLines(df: DataFrame): Seq[(SparkPlan, String)] =
     org.apache.spark.sql.graft.bridge
       .planNodes(df.queryExecution.executedPlan)
       .map(n => (n, nodeLine(n)))
 
-  private def nodeLine(n: org.apache.spark.sql.execution.SparkPlan): String =
-    n.simpleString(150)
+  private def nodeLine(n: SparkPlan): String = n.simpleString(150)
+
+  /** One line per `WindowExec` / `WindowGroupLimitExec` with an EMPTY
+    * partition spec in `df`'s executed plan (empty = clean). Such a
+    * window moves its whole input to one task ("No Partition Defined"),
+    * fine for an audit-grain fold and fatal for a corpus-grain one.
+    * Unlike [[redFlags]], the walk descends into cached build plans:
+    * PlanCache seams are where single-partition windows used to hide, and
+    * a seam's window runs once per session no matter who pays for it.
+    * Each line names the window functions (or group-limit rank) and the
+    * window's child; a `cached:` prefix marks a seam subtree. */
+  def unpartitionedWindows(df: DataFrame): Seq[String] = {
+    def walk(p: SparkPlan, tag: String): Seq[String] =
+      org.apache.spark.sql.graft.bridge.planNodes(p).flatMap {
+        case s: InMemoryTableScanExec =>
+          walk(s.relation.cachedPlan, s"cached:$tag")
+        case w: WindowExec if w.partitionSpec.isEmpty =>
+          Seq(s"$tag${w.windowExpression.map(_.sql.take(80)).mkString("; ")}" +
+            s" | child: ${w.child.simpleString(100)}")
+        case w: WindowGroupLimitExec if w.partitionSpec.isEmpty =>
+          Seq(s"${tag}group-limit rank<=${w.limit}" +
+            s" | child: ${w.child.simpleString(100)}")
+        case _ => Nil
+      }
+    walk(df.queryExecution.executedPlan, "")
+  }
 
   /** A `broadcast()` whose build-side size is an ENFORCED claim, not a
     * prose comment. Production behavior is exactly the plain broadcast
@@ -125,8 +151,8 @@ object PlanAudit {
     * BroadcastNestedLoopJoin: every one broadcasts a provably tiny side
     * (query-point sets, centroid tables, single-row counts, a
     * calendar-bounded dimension) — audited in PLANS.md, enforced by
-    * PlanAuditSpec, and consumed by [[PlanDump]] so the artifact and the
-    * test gate share one allow-list. */
+    * PlanAuditSpec, and consumed by [[snapshotJson]] so the artifact and
+    * the test gate share one allow-list. */
   val AllowedBnlj: Set[String] = Set(
     "q23_cosine_topk", "q24_ann_lsh", "q25_embedding_neardup",
     "q36_label_centroids", "q37_ivf_topk", "q48_ivf_multiprobe",
@@ -415,5 +441,43 @@ object PlanAudit {
         l.contains("PushedFilters: [") && !l.contains("PushedFilters: []")),
       "window_ops" -> n(_.contains("Window [")),
       "sorts" -> n(_.contains("Sort [")))
+  }
+
+  /** Per-query plan-shape snapshot (committed per round as
+    * `PLANS_r{N}.json`, written by `graft.App --plans`): for every
+    * declared query, the [[redFlags]] plus the [[shape]] counts and the
+    * WholeStageCodegen span count. The point is a mechanical
+    * round-over-round diff — "q46 gained a shuffle", "q03's broadcast
+    * degraded to a sort-merge" — instead of re-deriving plans by hand. */
+  def snapshotJson(spark: SparkSession, sfDir: String): String = {
+    val entries = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val df = fn(spark, sfDir)
+      val flags = redFlags(df, allowBnlj = AllowedBnlj.contains(name))
+      // codegen span count needs a non-AQE plan (the unexecuted adaptive
+      // plan hides codegen subtrees): re-instantiate the query with AQE
+      // off just for this diagnostic, then restore whatever the session
+      // had before (not a hard-coded "true" — Sessions may change it)
+      val aqePrior = spark.conf.get("spark.sql.adaptive.enabled")
+      val codegenSpans = try {
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        val cg = fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("codegen"))
+        "Found (\\d+) WholeStageCodegen".r.findFirstMatchIn(cg)
+          .map(_.group(1).toInt).getOrElse(0)
+      } finally spark.conf.set("spark.sql.adaptive.enabled", aqePrior)
+      val shapeJson = (shape(df) :+ ("wholestage_codegen_spans" -> codegenSpans))
+        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+      // full JSON escaper (control chars included), same rules as the
+      // oracle artifact — a newline inside a red-flag string must not
+      // corrupt PLANS_r{N}.json
+      val flagsJson = flags.map(Verify.jsonString).mkString("[", ",", "]")
+      s""""$name":{"red_flags":$flagsJson,"shape":$shapeJson}"""
+    }
+    // pin the artifact to the query set it snapshot: a stale artifact is
+    // mechanically detectable against SparkEntry.queries
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    val meta = s""""_meta":{"n_queries":${names.size},"queries":${
+      names.map(Verify.jsonString).mkString("[", ",", "]")}}"""
+    (meta +: entries).mkString("{\n", ",\n", "\n}\n")
   }
 }

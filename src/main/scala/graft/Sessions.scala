@@ -3,14 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Single session factory for every entry point (Verify, Bench, App,
-  * Explain, StreamDemo, tests): local[min(cpus,32)] with
+  * StreamDemo, tests): local[cpus] with
   * shuffle.partitions = threads, UTC, and the nanos-timestamp read flag
   * set at BUILD time — so reading `events.parquet` is order-independent
   * (no hidden conf mutation required first; see Tables.events). Every
   * streaming query's checkpoint goes through
   * [[graft.streaming.LocalCheckpointFileManager]]. */
 object Sessions {
-  def defaultCpus: Int = math.min(Runtime.getRuntime.availableProcessors, 32)
+  /** `SPARK_GRAFT_CPUS` when set, else min(available cores, 32) — the one
+    * place that variable is read. */
+  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption)
+    .getOrElse(math.min(Runtime.getRuntime.availableProcessors, 32))
 
   def local(cpus: Int = defaultCpus): SparkSession =
     SparkSession.builder()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,9 +13,7 @@ object Verify {
     // exactly two args and gets the full surface
     val only = args.drop(2).toSet
     def selected(name: String): Boolean = only.isEmpty || only.contains(name)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption)
-      .getOrElse(Sessions.defaultCpus)
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>

@@ -2326,7 +2326,7 @@ object EventAnalytics {
   }
 
   def valueMigrationSql: String = {
-    def leg(p: Int, cmp: String): String =
+    def leg(cmp: String): String =
       s"""  SELECT user_id, sum(cents)::BIGINT AS spend
          |  FROM ev CROSS JOIN mid WHERE day $cmp cut GROUP BY 1""".stripMargin
     def quartile(src: String): String =
@@ -2351,9 +2351,9 @@ object EventAnalytics {
        |  SELECT min(day) + ((max(day) - min(day)) // 2)::INTEGER AS cut
        |  FROM ev
        |), p1 AS (
-       |${leg(1, "<=")}
+       |${leg("<=")}
        |), p2 AS (
-       |${leg(2, ">")}
+       |${leg(">")}
        |), k1 AS (
        |${quartile("p1")}
        |), k2 AS (

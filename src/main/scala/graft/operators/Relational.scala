@@ -596,7 +596,10 @@ object Relational {
     // Plan diff: 4 Exchanges + BroadcastHashJoin -> 3 Exchanges, no
     // join; the 7 parent scans shuffle once instead of aggregating
     // twice. Orphan semantics unchanged: orphan iff no parent row
-    // shares (rel,k).
+    // shares (rel,k). NULL keys follow the twin's LEFT JOIN: a NULL
+    // parent key matches nothing (dropped here), and a NULL child key is
+    // an orphan row but not a key (count(k) and the orphan-key sum skip
+    // it).
     val parents = Seq(
       parentKeys("customer->nation", Tables.nation(spark, dir), "n_nationkey"),
       parentKeys("lineitem->orders", Tables.orders(spark, dir), "o_orderkey"),
@@ -606,6 +609,7 @@ object Relational {
       parentKeys("orders->customer", Tables.customer(spark, dir), "c_custkey"),
       parentKeys("supplier->nation", Tables.nation(spark, dir), "n_nationkey"))
       .reduce(_ unionByName _)
+      .filter(col("k").isNotNull)
     val nameOf = FkRelationships.zipWithIndex
       .map { case (n, i) => s"WHEN $i THEN '$n'" }.mkString(" ")
     children.withColumn("w", lit(1L))
@@ -615,10 +619,11 @@ object Relational {
       .filter(col("cnt") > 0)
       .groupBy(col("rel"))
       .agg(sum(col("cnt")).as("n_child_rows"),
-        count(lit(1)).as("n_child_keys"),
+        count(col("k")).as("n_child_keys"),
         sum(when(col("hit") === 0L, col("cnt")).otherwise(0L))
           .as("n_orphan_rows"),
-        sum(when(col("hit") === 0L, 1L).otherwise(0L)).as("n_orphan_keys"))
+        sum(when(col("hit") === 0L && col("k").isNotNull, 1L).otherwise(0L))
+          .as("n_orphan_keys"))
       .select(expr(s"CASE rel $nameOf END").as("relationship"),
         col("n_child_rows"), col("n_child_keys"),
         col("n_orphan_rows"), col("n_orphan_keys"))

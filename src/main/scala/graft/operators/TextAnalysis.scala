@@ -4248,7 +4248,6 @@ object TextAnalysis {
   def bpeMergeLadder(spark: SparkSession, dir: String,
                      k: Int = BpeLadderSteps): DataFrame = {
     require(k > 0, s"bpeMergeLadder: k must be positive ($k)")
-    import org.apache.spark.sql.expressions.Window
     val sep = "\u001f"
     var types = Tables.documents(spark, dir)
       .select(col("lang"), explode(TextHash.tokens(col("text"))).as("w"))

@@ -84,22 +84,29 @@ object TimeWindows {
       .select(col("user_id"), col("w.start").as("session_start"), col("n_events"))
       .orderBy(col("user_id"), col("session_start"))
 
+  /** The twin runs over DISTINCT (user, second) with a count `n`: with
+    * two events of one user in the same second, the `lag` window and the
+    * running-sum window could order the tie differently, splitting one
+    * session in two on some runs (seen on the x10-replicated events).
+    * Distinct timestamps leave no tie to order. */
   def userSessionsSql: String =
     """WITH e AS (
-      |  SELECT user_id, date_trunc('second', ts)::TIMESTAMP AS ts FROM events
+      |  SELECT user_id, date_trunc('second', ts)::TIMESTAMP AS ts,
+      |    count(*) AS n
+      |  FROM events GROUP BY 1, 2
       |), brk AS (
-      |  SELECT user_id, ts,
+      |  SELECT user_id, ts, n,
       |    CASE WHEN lag(ts) OVER w IS NULL
       |           OR ts - lag(ts) OVER w > INTERVAL '10 minutes'
       |         THEN 1 ELSE 0 END AS is_new
       |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts)
       |), sess AS (
-      |  SELECT user_id, ts,
+      |  SELECT user_id, ts, n,
       |    sum(is_new) OVER (PARTITION BY user_id ORDER BY ts
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
       |  FROM brk
       |)
-      |SELECT user_id, min(ts) AS session_start, count(*) AS n_events
+      |SELECT user_id, min(ts) AS session_start, sum(n)::BIGINT AS n_events
       |FROM sess GROUP BY user_id, sid
       |ORDER BY user_id, session_start""".stripMargin
 

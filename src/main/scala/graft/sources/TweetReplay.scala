@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.util
-import java.util.Optional
 
 import scala.collection.JavaConverters._
 

@@ -120,36 +120,53 @@ class EdgeCaseSpec extends SparkSpec {
         s"${r.getAs[String]("relationship")} must be consistent on driver data")
       assert(r.getAs[Long]("n_child_keys") <= r.getAs[Long]("n_child_rows"))
     }
-    // a broken load: two orders pointing at a missing customer
-    val dir = java.nio.file.Files.createTempDirectory("graft_fk").toString
-    def w(name: String, df: org.apache.spark.sql.DataFrame): Unit =
-      df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
-    w("region", Seq((0, "r")).toDF("r_regionkey", "r_name"))
-    w("nation", Seq((0, "n", 0)).toDF("n_nationkey", "n_name", "n_regionkey"))
-    w("customer", Seq((1L, "c", 0, 0.0, "m"))
-      .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
-    w("supplier", Seq((1L, "s", 0, 0.0))
-      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal"))
-    w("part", Seq((1L, "p", "b", "t", 1, 1.0))
-      .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice"))
-    w("orders", Seq(
-      (10L, 1L, "O", 1.0, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "1"),
-      (11L, 99L, "O", 1.0, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "1"),
-      (12L, 99L, "O", 1.0, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), "1"))
-      .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "o_orderdate", "o_orderpriority"))
-    w("lineitem", Seq((10L, 1L, 1L, 1, 1.0, 1.0, 0.0, 0.0, "N", "O",
-        java.sql.Timestamp.valueOf("2024-01-02 00:00:00")))
-      .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus", "l_shipdate"))
-    val broken = graft.operators.Relational.integrityAudit(spark, dir).collect()
-      .map(r => r.getAs[String]("relationship") ->
-        (r.getAs[Long]("n_orphan_rows"), r.getAs[Long]("n_orphan_keys"))).toMap
-    assert(broken("orders->customer") == (2L, 1L),
+    // a broken load: two orders pointing at a missing customer; then the
+    // same load plus an order with a NULL customer key and a customer with
+    // a NULL key — the twin's LEFT JOIN matches NULL to nothing, so the
+    // NULL order is an orphan row but not a key
+    def audit(extraOrder: Boolean, nullCustomer: Boolean) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_fk").toString
+      def w(name: String, df: org.apache.spark.sql.DataFrame): Unit =
+        df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
+      w("region", Seq((0, "r")).toDF("r_regionkey", "r_name"))
+      w("nation", Seq((0, "n", 0)).toDF("n_nationkey", "n_name", "n_regionkey"))
+      w("customer", (Seq[(Option[Long], String, Int, Double, String)](
+          (Some(1L), "c", 0, 0.0, "m")) ++
+          (if (nullCustomer) Seq((None, "c0", 0, 0.0, "m")) else Nil))
+        .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"))
+      w("supplier", Seq((1L, "s", 0, 0.0))
+        .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal"))
+      w("part", Seq((1L, "p", "b", "t", 1, 1.0))
+        .toDF("p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice"))
+      val day = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+      w("orders", (Seq[(Long, Option[Long])]((10L, Some(1L)), (11L, Some(99L)),
+          (12L, Some(99L))) ++ (if (extraOrder) Seq((13L, None)) else Nil))
+        .map { case (o, c) => (o, c, "O", 1.0, day, "1") }
+        .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+          "o_orderdate", "o_orderpriority"))
+      w("lineitem", Seq((10L, 1L, 1L, 1, 1.0, 1.0, 0.0, 0.0, "N", "O",
+          java.sql.Timestamp.valueOf("2024-01-02 00:00:00")))
+        .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
+          "l_quantity", "l_extendedprice", "l_discount", "l_tax",
+          "l_returnflag", "l_linestatus", "l_shipdate"))
+      graft.operators.Relational.integrityAudit(spark, dir).collect()
+        .map(r => r.getAs[String]("relationship") ->
+          (r.getAs[Long]("n_child_rows"), r.getAs[Long]("n_child_keys"),
+            r.getAs[Long]("n_orphan_rows"), r.getAs[Long]("n_orphan_keys"))).toMap
+    }
+    val broken = audit(extraOrder = false, nullCustomer = false)
+    assert(broken("orders->customer") == ((3L, 2L, 2L, 1L)),
       "two orphan orders sharing one missing customer key")
-    assert(broken.filterKeys(_ != "orders->customer").values
-      .forall(_ == (0L, 0L)), "no other relationship may fire")
+    assert(broken.filter(_._1 != "orders->customer").values
+      .forall(v => v._3 == 0L && v._4 == 0L), "no other relationship may fire")
+    // DuckDB's twin on the same load: (rows 4, keys 2, orphan rows 3,
+    // orphan keys 1)
+    val nulls = audit(extraOrder = true, nullCustomer = true)
+    assert(nulls("orders->customer") == ((4L, 2L, 3L, 1L)),
+      "a NULL child key is an orphan row, never a key, never matched")
+    assert(nulls("customer->nation") == ((2L, 1L, 0L, 0L)))
+    assert(nulls.filter(_._1 != "orders->customer").values
+      .forall(v => v._3 == 0L && v._4 == 0L), "no other relationship may fire")
   }
 
   test("bm25 on a corpus with zero query-term hits returns zero rows, no error") {

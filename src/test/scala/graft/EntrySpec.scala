@@ -29,7 +29,7 @@ class EntrySpec extends SparkSpec {
     // diff was blind to the 44 newest queries. Make a stale snapshot a
     // named failure: the highest-numbered committed PLANS_r*.json must
     // list exactly SparkEntry.queries (regenerate with
-    // `runMain graft.PlanDump /root/testdata/sf0.001 PLANS_r<N>.json`
+    // `runMain graft.App --plans <sf0.001 dir> PLANS_r<N>.json`
     // whenever the query set changes).
     val repo = java.nio.file.Paths.get("/root/repo")
     val latest = java.nio.file.Files.list(repo).iterator().asScala

@@ -8,6 +8,7 @@ package graft
   *  - a BroadcastNestedLoopJoin that is not one of the audited tiny-side
   *    crosses (query-point sets, centroid tables, single-row counts),
   *  - a Window over SinglePartition (a corpus-sized single-task sort),
+  *  - any window with no partition spec, PlanCache seam subtrees included,
   *  - a documents/lineitem parquet scan that reads every column for a
   *    narrower projection (pushdown/pruning silently lost).
   *
@@ -17,26 +18,26 @@ package graft
 class PlanAuditSpec extends SparkSpec {
 
   // queries whose plans legitimately carry a BroadcastNestedLoopJoin:
-  // the single source of truth lives in PlanAudit (shared with PlanDump)
+  // the single source of truth lives in PlanAudit (shared with the
+  // plan snapshot)
   private val allowedBnlj = PlanAudit.AllowedBnlj
 
-  private lazy val plans: Seq[(String, String)] =
+  // every declared query planned ONCE; the sweeps below read the same
+  // executed plans
+  private lazy val planned: Seq[(String, org.apache.spark.sql.DataFrame)] =
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> fn(spark, sf0001).queryExecution.executedPlan.toString
+      name -> fn(spark, sf0001)
     }
 
   // every query runs through the PUBLIC PlanAudit.redFlags API (the
   // user-facing guardrail), so the spec also proves that API catches
   // exactly what it documents
-  private lazy val audited: Seq[(String, Seq[String])] =
-    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> PlanAudit.redFlags(fn(spark, sf0001),
-        allowBnlj = allowedBnlj.contains(name))
-    }
-
   test("no query plan raises a red flag (CartesianProduct / unaudited BNLJ / global window)") {
-    audited.foreach { case (name, flags) =>
+    planned.foreach { case (name, df) =>
+      val flags = PlanAudit.redFlags(df, allowBnlj = allowedBnlj.contains(name))
       assert(flags.isEmpty, s"$name: ${flags.mkString("; ")}")
+      val windows = PlanAudit.unpartitionedWindows(df)
+      assert(windows.isEmpty, s"$name: unpartitioned window ${windows.mkString("; ")}")
     }
   }
 
@@ -56,6 +57,14 @@ class PlanAuditSpec extends SparkSpec {
     assert(PlanAudit.redFlags(globalWin)
       .exists(_.contains("SinglePartition")),
       "an unpartitioned window must trip the audit")
+    assert(PlanAudit.unpartitionedWindows(globalWin).nonEmpty)
+    // the same window built inside a PlanCache seam: redFlags stops at
+    // the cached subtree, only the window walk descends into it
+    val seamed = PlanCache.cached(spark, "plan-audit-planted-window")(globalWin)
+      .groupBy("rn").count()
+    assert(PlanAudit.redFlags(seamed).isEmpty)
+    assert(PlanAudit.unpartitionedWindows(seamed).exists(_.startsWith("cached:")),
+      "an unpartitioned window inside a seam must trip the window walk")
   }
 
   test("bounded-broadcast claims: every migrated BNLJ entry registers a claim and the data honors it") {
@@ -179,7 +188,8 @@ class PlanAuditSpec extends SparkSpec {
   test("every documents scan prunes to the columns the query needs") {
     // full schema is doc_id,text,lang,source,n_chars (5 cols); any scan
     // reading all 5 has lost column pruning — no current query needs all
-    plans.foreach { case (name, p) =>
+    planned.foreach { case (name, df) =>
+      val p = df.queryExecution.executedPlan.toString
       p.linesIterator.filter(l => l.contains("ReadSchema") &&
           l.contains("documents")).foreach { l =>
         val nCols = l.substring(l.indexOf("struct<")).count(_ == ':')
