@@ -1,51 +1,85 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped registry for the handful of persisted intermediates the
-  * dedup/similarity operators share (minhash signatures, simhash
-  * fingerprints, LSH-bucketed embeddings, IVF assignments).
+/** The one session-scoped registry for everything graft reuses. Entries
+  * are keyed (session, key) and carry their own release action; [[clear]]
+  * runs the release of every entry a session holds (Verify, Bench, App
+  * and the tests call it; a long-lived service would call it per request
+  * scope). Three kinds of entry:
   *
-  * Why it exists: those operators persist a signature table and then
-  * self-join it — without a materialization point each join side would
-  * recompute the hash kernels (2-4×). But calling `.persist` on a freshly
-  * built (identical) plan at every operator invocation re-registers the
-  * same entry, which (a) spams `CacheManager: Asked to cache already
-  * cached data` in long sessions and (b) leaves lifecycle implicit (LRU
-  * only). This registry makes the lifecycle explicit: one persist per
-  * (session, key), callers get the SAME DataFrame reference back, and
-  * [[clear]] releases everything a session pinned (Verify/tests call it;
-  * a long-lived service would call it per request scope).
+  *  - '''Persisted seam''' ([[cached]]): a MEMORY_AND_DISK persist of an
+  *    intermediate operators share (minhash signatures, IVF assignments,
+  *    ...) so a self-join does not recompute the hash kernels, persisted
+  *    once per session instead of re-registered per invocation. Released
+  *    by `unpersist(blocking = false)`.
+  *  - '''Resolved relation''' ([[relation]], behind `Tables.table`): the
+  *    lazy parquet DataFrame, so a session reads each footer and listing
+  *    once; every action still scans parquet. Released by dropping the
+  *    reference only: an `unpersist` would drop any user-cached plan
+  *    equal to it.
+  *  - '''Derived layout''' ([[layout]]): a re-laid-out copy of an input
+  *    (q63's day-partitioned events, q69's bucketed tables) written into
+  *    a fresh directory of its own. Released by deleting the directory.
   */
 object PlanCache {
 
-  private val entries =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+  private final case class Entry(value: AnyRef, release: () => Unit)
 
-  /** Session identity = `sessionUUID` — unique per SparkSession instance
-    * for the lifetime of the JVM (identityHashCode, the previous key,
-    * can collide between two live sessions). Concurrent sessions
-    * (service mode, `spark.newSession()` per request) therefore never
-    * share or clobber each other's entries; PlanCacheSpec pins this. */
+  private val entries = scala.collection.concurrent.TrieMap.empty[(String, String), Entry]
+
+  /** `sessionUUID` is unique per SparkSession instance for the lifetime
+    * of the JVM, so concurrent sessions (`spark.newSession()` per
+    * request) never share or clobber entries; PlanCacheSpec pins this. */
   private def sid(spark: SparkSession): String =
     org.apache.spark.sql.graft.bridge.sessionUUID(spark)
 
   /** The persisted DataFrame for `key` in this session, building (and
     * persisting MEMORY_AND_DISK) it on first use. */
   def cached(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    entries.getOrElseUpdate((sid(spark), key),
-      build.persist(StorageLevel.MEMORY_AND_DISK))
+    entries.getOrElseUpdate((sid(spark), key), {
+      val df = build.persist(StorageLevel.MEMORY_AND_DISK)
+      Entry(df, () => df.unpersist(blocking = false))
+    }).value.asInstanceOf[DataFrame]
 
-  /** Unpersist and drop every entry this session pinned, and the
-    * session's resolved relations in [[Tables]]. Blocking=false:
-    * eviction proceeds asynchronously, callers don't wait on it. */
+  /** The resolved relation for `key` in this session, resolving it on
+    * first use. A hit is one lock-free map lookup. */
+  private[graft] def relation(spark: SparkSession, key: String)(resolve: => DataFrame): DataFrame =
+    entries.getOrElseUpdate((sid(spark), key), Entry(resolve, () => ())).value.asInstanceOf[DataFrame]
+
+  /** The directory of derived layout `key` in this session; on first use
+    * `write` fills a fresh temp directory. The release runs `drop` (for
+    * catalog entries pointing into the directory), then deletes it; it
+    * runs on [[clear]], when `write` fails, and for the loser of two
+    * concurrent builds of one key. */
+  def layout(spark: SparkSession, key: String)(write: String => Unit)(
+      drop: String => Unit = _ => ()): String =
+    entries.get((sid(spark), key)).getOrElse {
+      val dir = Files.createTempDirectory("graft_layout_")
+      val mine = Entry(dir.toString, () => { drop(dir.toString); deleteTree(dir) })
+      try write(dir.toString)
+      catch { case e: Throwable => mine.release(); throw e }
+      entries.putIfAbsent((sid(spark), key), mine) match {
+        case Some(theirs) => mine.release(); theirs
+        case None => mine
+      }
+    }.value.asInstanceOf[String]
+
+  private def deleteTree(dir: Path): Unit = if (Files.exists(dir)) {
+    val walk = Files.walk(dir)
+    try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
+    finally walk.close()
+  }
+
+  /** Release and drop every entry this session holds. */
   def clear(spark: SparkSession): Unit = {
     val s = sid(spark)
     entries.keys.filter(_._1 == s).foreach { k =>
-      entries.remove(k).foreach(_.unpersist(blocking = false))
+      entries.remove(k).foreach(_.release())
     }
-    Tables.clear(spark)
   }
 
   /** Entries this session holds (PlanCacheSpec checks the release). */

@@ -12,8 +12,14 @@ import org.apache.spark.sql.SparkSession
 object Sessions {
   /** `SPARK_GRAFT_CPUS` when set, else min(available cores, 32) — the one
     * place that variable is read. */
-  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.trim.toIntOption)
+  def defaultCpus: Int = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
     .getOrElse(math.min(Runtime.getRuntime.availableProcessors, 32))
+
+  /** A `SPARK_GRAFT_CPUS` value (blank = unset); anything but a positive
+    * integer fails loudly instead of falling back. */
+  def parseCpus(value: Option[String]): Option[Int] = value.map(_.trim).filter(_.nonEmpty).map(v =>
+    v.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer core count, got '$v'")))
 
   def local(cpus: Int = defaultCpus): SparkSession =
     SparkSession.builder()

@@ -11,44 +11,14 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: a plain `spark.read.parquet` is the right 100 TB shape —
   * Catalyst pushes predicates into row-group pruning and prunes columns, so
-  * every query below only pays for the columns/rows it touches. No caching,
-  * no collect: the loaders stay lazy plan fragments.
+  * every query below only pays for the columns/rows it touches. No collect:
+  * the loaders stay lazy plan fragments.
   */
 object Tables {
-  /** Resolved-relation cache, keyed (sessionUUID, path): `read.parquet`
-    * re-reads the parquet FOOTER (schema inference + file listing) on
-    * EVERY call — measured ~45-55 ms per resolve, and a query that
-    * touches many tables pays it per table per invocation (q137's 12
-    * resolves were 0.6 s of its 1.35 s bench time — §7.3 driver-side
-    * planning, the §6 listing-cache point applied to the footer). The
-    * cache holds the LAZY plan fragment only — no data, no persist:
-    * every action still scans parquet, so this is plan reuse, not
-    * result caching. Session-keyed like PlanCache (sessionUUID is
-    * unique per live session); the test dirs are immutable for a
-    * session's lifetime, which is what makes the resolved listing
-    * reusable. */
-  private val resolved =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-
+  /** Resolved once per session: a [[PlanCache.relation]] entry. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    resolved.getOrElseUpdate((sid(spark), s"$dir/$name.parquet"),
+    PlanCache.relation(spark, s"table:$dir/$name.parquet")(
       spark.read.parquet(s"$dir/$name.parquet"))
-
-  /** Drop every resolved relation this session holds; `PlanCache.clear`
-    * calls it, so a session's two caches are released together. */
-  def clear(spark: SparkSession): Unit = {
-    val s = sid(spark)
-    resolved.keys.filter(_._1 == s).foreach(resolved.remove)
-  }
-
-  /** Entries this session holds (PlanCacheSpec checks the release). */
-  private[graft] def size(spark: SparkSession): Int = {
-    val s = sid(spark)
-    resolved.keys.count(_._1 == s)
-  }
-
-  private def sid(spark: SparkSession): String =
-    org.apache.spark.sql.graft.bridge.sessionUUID(spark)
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

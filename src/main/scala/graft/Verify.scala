@@ -37,7 +37,7 @@ object Verify {
   // JSON string escape: backslash, quote, and ALL control chars (<0x20)
   // — a tab or CR in builder-authored SQL would otherwise make the
   // driver's json.load fail and silently zero the round's correctness.
-  // Shared with PlanDump so every committed artifact uses the same rules.
+  // Shared with PlanAudit.snapshotJson: every artifact escapes alike.
   def jsonString(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"

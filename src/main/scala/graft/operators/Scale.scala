@@ -128,13 +128,16 @@ object Scale {
   /** Write both sides bucketed+sorted on the join key so the join needs
     * no Exchange at read time (bucket-pruned, sort-merge ready). This is
     * the layout a 100 TB fact table should be materialized in when it is
-    * joined on the same key repeatedly. Returns the saved table names. */
+    * joined on the same key repeatedly. The table is external: its files
+    * live at `path` and the catalog keeps the bucket spec. Returns the
+    * saved table name. */
   def writeBucketed(df: DataFrame, table: String, key: String,
-                    buckets: Int): String = {
+                    buckets: Int, path: String): String = {
     df.write.mode("overwrite")
       .bucketBy(buckets, key)
       .sortBy(key)
       .format("parquet")
+      .option("path", path)
       .saveAsTable(table)
     table
   }
@@ -164,40 +167,26 @@ object Scale {
       |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
       |GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin
 
-  /** Tables whose bucketed copies this JVM already wrote (same
-    * once-per-JVM materialization contract as the q63 partitioned
-    * layout and the IVF index). */
-  private val bucketedDirs = scala.collection.mutable.Set.empty[String]
-
   /** Oracle-gated bucketed join (q69): lineitem and orders rewritten
     * bucketed+sorted on the order key (8 buckets), then joined — the
     * scan-time co-location that removes BOTH Exchanges from a repeated
     * fact⋈fact join at 100 TB (ScaleSpec proves the no-Exchange plan).
+    * The two tables are a [[graft.PlanCache.layout]] entry: written once
+    * per session, named after their directory (so sessions sharing one
+    * catalog never collide), dropped and deleted by `PlanCache.clear`.
     * The oracle is the plain join over the original tables: a layout
     * rewrite must be invisible in query results. */
   def bucketedJoinSummary(spark: org.apache.spark.sql.SparkSession,
                           dir: String): DataFrame = {
-    val suffix = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val lt = s"graft_lineitem_bkt_$suffix"
-    val ot = s"graft_orders_bkt_$suffix"
-    bucketedDirs.synchronized {
-      if (!bucketedDirs.contains(suffix)) {
-        Seq(lt, ot).foreach { t =>
-          spark.sql(s"DROP TABLE IF EXISTS $t")
-          // a previous JVM may have left the managed location behind with
-          // no catalog entry — saveAsTable refuses to reuse such a dir
-          val loc = new org.apache.hadoop.fs.Path(
-            spark.conf.get("spark.sql.warehouse.dir"), t)
-          val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(loc)) fs.delete(loc, true)
-        }
-        writeBucketed(graft.Tables.lineitem(spark, dir)
-          .select(col("l_orderkey"), col("l_quantity")), lt, "l_orderkey", 8)
-        writeBucketed(graft.Tables.orders(spark, dir)
-          .select(col("o_orderkey"), col("o_orderpriority")), ot, "o_orderkey", 8)
-        bucketedDirs += suffix
-      }
-    }
+    def names(out: String) = Seq("lineitem", "orders")
+      .map(t => s"graft_${t}_bkt_${new java.io.File(out).getName}")
+    val Seq(lt, ot) = names(graft.PlanCache.layout(spark, s"scale.bucketed:$dir") { out =>
+      val Seq(l, o) = names(out)
+      writeBucketed(graft.Tables.lineitem(spark, dir)
+        .select(col("l_orderkey"), col("l_quantity")), l, "l_orderkey", 8, s"$out/$l")
+      writeBucketed(graft.Tables.orders(spark, dir)
+        .select(col("o_orderkey"), col("o_orderpriority")), o, "o_orderkey", 8, s"$out/$o")
+    }(names(_).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))))
     spark.table(lt)
       .join(spark.table(ot), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority"))

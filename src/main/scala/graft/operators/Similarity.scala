@@ -730,6 +730,15 @@ object Similarity {
     s"((($id) % $SeedMod) * $Knuth) % 4294967296"
   private val roundHalf = lit(0.0) // +0.0 after round: normalizes -0.0
 
+  /** The k-means seed rows with `cid` = their 0-based rank by
+    * (h, vec_id), without a global window: |{seeds sorting before this
+    * one}| over the broadcast K-row seed table. */
+  private def seedCids(seeds: DataFrame): DataFrame =
+    seeds.join(broadcast(seeds.select(col("h").as("h2"), col("vec_id").as("id2"))),
+        col("h2") < col("h") || (col("h2") === col("h") && col("id2") < col("vec_id")), "left")
+      .groupBy(seeds.columns.map(col).toIndexedSeq: _*)
+      .agg(count(col("id2")).cast("int").as("cid"))
+
   /** One Lloyd assignment pass: (vec_id, v, nrm, cid) of the nearest
     * centroid. */
   private def assignStep(e: DataFrame, cents: DataFrame): DataFrame = {
@@ -752,10 +761,8 @@ object Similarity {
     val e = withNorm(Tables.embeddings(spark, dir), "embedding")
       .select(col("vec_id"), col("v"), col("nrm"))
     val cents = graft.PlanCache.cached(spark, s"sim.kmCents:$dir") {
-      val wSeed = Window.orderBy(col("h"), col("vec_id"))
-      var c = e.select(col("vec_id"), col("v"), seedHash(col("vec_id")).as("h"))
-        .orderBy(col("h"), col("vec_id")).limit(KmClusters)
-        .withColumn("cid", row_number().over(wSeed) - 1)
+      var c = seedCids(e.select(col("vec_id"), col("v"), seedHash(col("vec_id")).as("h"))
+          .orderBy(col("h"), col("vec_id")).limit(KmClusters))
         .select(col("cid"), col("v").as("cv"))
         .withColumn("cnrm", sqrt(dot(col("cv"), col("cv"))))
       for (_ <- 1 to KmIters) {
@@ -1205,10 +1212,8 @@ object Similarity {
     val cents = graft.PlanCache.cached(spark, s"sim.pqCents:$dir") {
       (0 until PqM).map { m =>
         val es = subspace(m)
-        val wSeed = Window.orderBy(col("h"), col("vec_id"))
-        var c = es.select(col("vec_id"), col("sv"), seedHash(col("vec_id")).as("h"))
-          .orderBy(col("h"), col("vec_id")).limit(PqK)
-          .withColumn("cid", row_number().over(wSeed) - 1)
+        var c = seedCids(es.select(col("vec_id"), col("sv"), seedHash(col("vec_id")).as("h"))
+            .orderBy(col("h"), col("vec_id")).limit(PqK))
           .select(col("cid"), col("sv").as("cv"))
           .withColumn("cn2", dot(col("cv"), col("cv")))
         for (_ <- 1 to PqIters) {

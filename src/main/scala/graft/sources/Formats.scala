@@ -55,29 +55,17 @@ object Formats {
     (if (fmt == "csv") w1.option("header", "true") else w1).save(path)
   }
 
-  /** Paths whose Hive-partitioned copy has already been written by THIS
-    * JVM — [[eventsByDayPath]] is called per query evaluation (Verify,
-    * twice per Bench pass) and the layout only needs materializing once,
-    * like the IVF family's PlanCache'd index. */
-  private val writtenLayouts = scala.collection.mutable.Set.empty[String]
-
-  /** Materialize (once per JVM) the `events` table re-laid-out as a
-    * Hive-partitioned parquet tree, one directory per day. This is THE
+  /** The `events` table re-laid-out as a Hive-partitioned parquet tree,
+    * one directory per day: a [[graft.PlanCache.layout]] entry, written
+    * once per session and deleted by `PlanCache.clear`. This is THE
     * 100 TB layout move for a time-series fact table: every query that
     * filters on `day` scans only the matching directories. */
   def eventsByDayPath(spark: SparkSession, dir: String): String = {
     import org.apache.spark.sql.functions._
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft_events_by_day_" +
-      dir.replaceAll("[^A-Za-z0-9]", "_")
-    writtenLayouts.synchronized {
-      if (!writtenLayouts.contains(path)) {
-        val ev = graft.Tables.events(spark, dir)
-          .withColumn("day", to_date(col("ts")))
-        writePartitioned(ev, path, "parquet", Seq("day"))
-        writtenLayouts += path
-      }
-    }
-    path
+    graft.PlanCache.layout(spark, s"formats.eventsByDay:$dir") { out =>
+      writePartitioned(graft.Tables.events(spark, dir)
+        .withColumn("day", to_date(col("ts"))), s"$out/events", "parquet", Seq("day"))
+    }() + "/events"
   }
 
   /** Oracle-gated partition-pruning query (q63): read the day-partitioned

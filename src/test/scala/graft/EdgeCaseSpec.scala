@@ -10,6 +10,16 @@ import graft.streaming.Pipeline
 class EdgeCaseSpec extends SparkSpec {
   import spark.implicits._
 
+  test("SPARK_GRAFT_CPUS: a malformed or non-positive core count fails loudly") {
+    assert(Sessions.parseCpus(None).isEmpty)
+    assert(Sessions.parseCpus(Some(" ")).isEmpty)
+    assert(Sessions.parseCpus(Some(" 4 ")).contains(4))
+    Seq("four", "0", "-2", "4.5").foreach { v =>
+      val e = intercept[IllegalArgumentException](Sessions.parseCpus(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(v))
+    }
+  }
+
   test("sentiment oracle SQL lowercases and escapes the track literal") {
     val sql = TextPipeline.sentimentByLabelSql("en", "O'Spark")
     assert(sql.contains("contains(lower(text), 'o''spark')"),

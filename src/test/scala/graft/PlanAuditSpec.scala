@@ -15,19 +15,30 @@ package graft
   * PLANS.md documents the intended shape per query; this spec pins the
   * red-flag subset mechanically so a refactor can't reintroduce one.
   */
-class PlanAuditSpec extends SparkSpec {
+class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+  import PlanAuditSpec.globalWindowWarnings
 
   // queries whose plans legitimately carry a BroadcastNestedLoopJoin:
   // the single source of truth lives in PlanAudit (shared with the
   // plan snapshot)
   private val allowedBnlj = PlanAudit.AllowedBnlj
 
-  // every declared query planned ONCE; the sweeps below read the same
-  // executed plans
-  private lazy val planned: Seq[(String, org.apache.spark.sql.DataFrame)] =
+  // every declared query planned ONCE, in a fresh session so that every
+  // PlanCache seam and localCheckpoint cut is planned inside the sweep
+  // (a cut hides its subtree from the plan tree, so the window walk
+  // cannot see it; WindowExec's warning, logged while it is planned,
+  // can). The sweeps below read the same executed plans.
+  private lazy val sweep = spark.newSession()
+  private lazy val (planned, windowWarnings) = globalWindowWarnings {
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> fn(spark, sf0001)
+      val df = fn(sweep, sf0001)
+      df.queryExecution.executedPlan
+      name -> df
     }
+  }
+
+  override def afterAll(): Unit =
+    try PlanCache.clear(sweep) finally super.afterAll()
 
   // every query runs through the PUBLIC PlanAudit.redFlags API (the
   // user-facing guardrail), so the spec also proves that API catches
@@ -39,6 +50,8 @@ class PlanAuditSpec extends SparkSpec {
       val windows = PlanAudit.unpartitionedWindows(df)
       assert(windows.isEmpty, s"$name: unpartitioned window ${windows.mkString("; ")}")
     }
+    assert(windowWarnings.isEmpty,
+      s"a window with no partition spec was planned: ${windowWarnings.mkString("; ")}")
   }
 
   test("the audit itself catches a planted cartesian and a global window") {
@@ -58,6 +71,12 @@ class PlanAuditSpec extends SparkSpec {
       .exists(_.contains("SinglePartition")),
       "an unpartitioned window must trip the audit")
     assert(PlanAudit.unpartitionedWindows(globalWin).nonEmpty)
+    // planning it logs the warning the sweep listens for
+    val (_, warned) = globalWindowWarnings {
+      a.withColumn("rn", org.apache.spark.sql.functions.row_number().over(w))
+        .queryExecution.executedPlan
+    }
+    assert(warned.nonEmpty, "the sweep's warning capture must see a planted global window")
     // the same window built inside a PlanCache seam: redFlags stops at
     // the cached subtree, only the window walk descends into it
     val seamed = PlanCache.cached(spark, "plan-audit-planted-window")(globalWin)
@@ -196,6 +215,35 @@ class PlanAuditSpec extends SparkSpec {
         assert(nCols < 5,
           s"$name: documents scan reads all columns — pruning lost:\n$l")
       }
+    }
+  }
+}
+
+object PlanAuditSpec {
+  /** `body`'s value and the "No Partition Defined for Window operation"
+    * warnings Spark logged while it ran. */
+  def globalWindowWarnings[A](body: => A): (A, Seq[String]) = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("global-window-warnings", null, null, true,
+        Array.empty[org.apache.logging.log4j.core.config.Property]) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("No Partition Defined for Window operation"))
+          seen.add(s"${e.getLoggerName}: $m")
+      }
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try {
+      val a = body
+      (a, scala.jdk.CollectionConverters.IteratorHasAsScala(seen.iterator).asScala.toSeq)
+    } finally {
+      root.removeAppender(appender)
+      appender.stop()
     }
   }
 }

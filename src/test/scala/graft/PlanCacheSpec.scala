@@ -42,16 +42,50 @@ class PlanCacheSpec extends SparkSpec {
 
   test("clear releases a session's PlanCache seams and Tables relations together") {
     // cycle sessions the way a server (or the cold benchmark) does: each
-    // fills both caches, then clear must shrink both back to nothing
+    // fills the registry with relations and a seam, then clear must
+    // shrink it back to nothing
     for (_ <- 0 until 3) {
       val s = spark.newSession()
       Tables.table(s, sf0001, "region")
       Tables.events(s, sf0001)
       PlanCache.cached(s, "sig")(s.range(5).toDF("n"))
-      assert(Tables.size(s) == 2 && PlanCache.size(s) == 1)
+      assert(PlanCache.size(s) == 3)
       PlanCache.clear(s)
-      assert(Tables.size(s) == 0, "PlanCache.clear must release Tables.resolved")
-      assert(PlanCache.size(s) == 0)
+      assert(PlanCache.size(s) == 0, "PlanCache.clear must release every entry")
     }
+
+    // derived layouts (q63's day-partitioned events, q69's bucketed
+    // tables) are per session: own directories, own catalog names, and
+    // clear deletes both
+    def q63(s: org.apache.spark.sql.SparkSession) =
+      SparkEntry.queries("q63_partitioned_daily")(s, sf0001).collect().toSeq
+    def q69(s: org.apache.spark.sql.SparkSession) =
+      SparkEntry.queries("q69_bucketed_join")(s, sf0001).collect().toSeq
+    def bucketTables: Set[String] =
+      spark.catalog.listTables().collect().map(_.name)
+        .filter(_.startsWith("graft_")).toSet
+    def location(t: String): java.nio.file.Path =
+      java.nio.file.Paths.get(new java.net.URI(
+        spark.sql(s"DESCRIBE TABLE EXTENDED $t").collect()
+          .find(_.getString(0) == "Location").get.getString(1)))
+    val sessions = Seq(spark.newSession(), spark.newSession())
+    try {
+      val before = bucketTables
+      val rows = sessions.map(s => (q63(s), q69(s)))
+      assert(rows.forall(_ == rows.head) && rows.head._2.nonEmpty)
+      val dayDirs = sessions.map(s => java.nio.file.Paths.get(
+        graft.sources.Formats.eventsByDayPath(s, sf0001)))
+      val tables = bucketTables -- before
+      assert(tables.size == 4, s"two bucketed tables per session: $tables")
+      val tableDirs = tables.map(location)
+      assert(dayDirs.distinct.size == 2 && tableDirs.map(_.getParent).size == 2,
+        s"each session writes its own layouts: $dayDirs $tableDirs")
+      sessions.foreach(PlanCache.clear)
+      assert(bucketTables == before, "clear must drop the bucketed tables")
+      (dayDirs ++ tableDirs).foreach(d =>
+        assert(!java.nio.file.Files.exists(d.getParent), s"clear must delete $d"))
+      // a cleared session rebuilds its layouts and returns the same rows
+      assert(sessions.map(s => (q63(s), q69(s))) == rows)
+    } finally sessions.foreach(PlanCache.clear)
   }
 }

@@ -193,14 +193,14 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("bucketed tables join without an Exchange (co-located layout)") {
-    // warehouse dir is static config — tables land in ./spark-warehouse
-    // (gitignored) and are dropped below
+    // external tables in a temp dir (not the cwd warehouse), dropped below
+    val dir = java.nio.file.Files.createTempDirectory("graft_bkt").toString
     Scale.writeBucketed(
       Tables.orders(spark, sf0001).select("o_orderkey", "o_totalprice"),
-      "orders_bkt", "o_orderkey", 8)
+      "orders_bkt", "o_orderkey", 8, s"$dir/orders")
     Scale.writeBucketed(
       Tables.lineitem(spark, sf0001).select("l_orderkey", "l_quantity"),
-      "lineitem_bkt", "l_orderkey", 8)
+      "lineitem_bkt", "l_orderkey", 8, s"$dir/lineitem")
     // at sf0.001 the planner prefers broadcast; disable it so the test
     // demonstrates the sort-merge path a 100 TB fact-fact join would take
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -219,6 +219,7 @@ class ScaleSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       spark.sql("DROP TABLE IF EXISTS lineitem_bkt")
       spark.sql("DROP TABLE IF EXISTS orders_bkt")
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }
 
