@@ -229,7 +229,9 @@ object Bench {
         q.stop()
         rows / ((System.nanoTime() - t0) / 1e9)
       }
-      math.max(onePassRps(), onePassRps())
+      val rps = math.max(onePassRps(), onePassRps())
+      PlanCache.deleteTree(streamDir)
+      rps
     } catch { case e: Throwable => errors += s"stream_bench: ${e.getClass.getSimpleName}"; -1.0 }
     // built AFTER the stream stage so its failures surface too; distinct
     // so a repeat failure of one query can't double-count in the list

@@ -3,19 +3,27 @@ package graft
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.storage.StorageLevel
 
-/** The one session-scoped registry for everything graft reuses. Entries
-  * are keyed (session, key) and carry their own release action; [[clear]]
-  * runs the release of every entry a session holds (Verify, Bench, App
-  * and the tests call it; a long-lived service would call it per request
-  * scope). Three kinds of entry:
+/** The one session-scoped registry for everything graft reuses, and the
+  * only way graft materializes an intermediate. Entries are keyed
+  * (session, key) and carry their own release action; [[clear]] runs the
+  * release of every entry a session holds (Verify, Bench, App and the
+  * tests call it; a long-lived service would call it per request scope).
+  * Three kinds of entry:
   *
   *  - '''Persisted seam''' ([[cached]]): a MEMORY_AND_DISK persist of an
-  *    intermediate operators share (minhash signatures, IVF assignments,
-  *    ...) so a self-join does not recompute the hash kernels, persisted
-  *    once per session instead of re-registered per invocation. Released
-  *    by `unpersist(blocking = false)`.
+  *    intermediate (minhash signatures, IVF assignments, a k-means
+  *    iterate, a kernel evaluated before its threshold filter, ...),
+  *    built once per session. The seam comes back as a DataFrame whose
+  *    logical plan is the cached relation as a LEAF, so it cuts the plan
+  *    lineage: consumers never re-analyze the subtree below it, an
+  *    iterate read twice per round does not double the unrolled plan,
+  *    and no optimizer rule moves an expression across it (a kernel
+  *    below the cut runs once, not once per reference above it). Unlike
+  *    a lineage-free checkpoint, a lost block is recomputed from the
+  *    cached plan. Released by `unpersist(blocking = false)`.
   *  - '''Resolved relation''' ([[relation]], behind `Tables.table`): the
   *    lazy parquet DataFrame, so a session reads each footer and listing
   *    once; every action still scans parquet. Released by dropping the
@@ -24,6 +32,12 @@ import org.apache.spark.storage.StorageLevel
   *  - '''Derived layout''' ([[layout]]): a re-laid-out copy of an input
   *    (q63's day-partitioned events, q69's bucketed tables) written into
   *    a fresh directory of its own. Released by deleting the directory.
+  *
+  * A seam's key names every input of its builder: the data dir, the
+  * parameters the builder reads and, inside an iterative loop, the
+  * iteration, so each round is its own seam over the previous one. A
+  * builder over a caller's DataFrame has no stable name; its key carries
+  * a per-call id, and the seam lives until [[clear]].
   */
 object PlanCache {
 
@@ -35,14 +49,24 @@ object PlanCache {
     * of the JVM, so concurrent sessions (`spark.newSession()` per
     * request) never share or clobber entries; PlanCacheSpec pins this. */
   private def sid(spark: SparkSession): String =
-    org.apache.spark.sql.graft.bridge.sessionUUID(spark)
+    bridge.sessionUUID(spark)
 
-  /** The persisted DataFrame for `key` in this session, building (and
-    * persisting MEMORY_AND_DISK) it on first use. */
+  /** The seam for `key` in this session: on first use `build` is
+    * persisted MEMORY_AND_DISK (filled by the first action that reads
+    * it) and its cached relation is returned as a plan leaf. Seams that
+    * `build` reads enter the persisted plan as flat scans of their
+    * cached rows ([[bridge.flattenSeams]]), so a loop's plan stays one
+    * round deep. A `build` that returns a seam as it is (the last round
+    * of a loop) is keyed as it is: the entry that made it owns its
+    * release. */
   def cached(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
     entries.getOrElseUpdate((sid(spark), key), {
-      val df = build.persist(StorageLevel.MEMORY_AND_DISK)
-      Entry(df, () => df.unpersist(blocking = false))
+      val built = build
+      if (bridge.isCachedLeaf(built)) Entry(built, () => ())
+      else {
+        val df = bridge.flattenSeams(built).persist(StorageLevel.MEMORY_AND_DISK)
+        Entry(bridge.cachedLeaf(df), () => df.unpersist(blocking = false))
+      }
     }).value.asInstanceOf[DataFrame]
 
   /** The resolved relation for `key` in this session, resolving it on
@@ -68,7 +92,8 @@ object PlanCache {
       }
     }.value.asInstanceOf[String]
 
-  private def deleteTree(dir: Path): Unit = if (Files.exists(dir)) {
+  /** Delete `dir` and everything under it, if it exists. */
+  private[graft] def deleteTree(dir: Path): Unit = if (Files.exists(dir)) {
     val walk = Files.walk(dir)
     try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(p => Files.delete(p))
     finally walk.close()

@@ -308,19 +308,22 @@ object Dedup {
     * set (candidate generation is the scalable half; this adds the exact
     * verify half — the full textbook MinHash-LSH pipeline). */
   def ngramJaccardNearDup(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame = {
-    val cand = candidatePairs(spark, dir)
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    cand
-      .join(docs.select(col("doc_id").as("doc_a"), col("text").as("ta")), Seq("doc_a"))
-      .join(docs.select(col("doc_id").as("doc_b"), col("text").as("tb")), Seq("doc_b"))
-      .select(col("doc_a"), col("doc_b"),
-        round(graft.functions.HashExpressions.ngramJaccard(col("ta"), col("tb")), 6)
-          .as("jaccard"))
-      // materialize before the threshold filter and sort: CollapseProject
-      // otherwise inlines the shingle-set kernel into the Filter predicate
-      // and the post-sort projection, paying it 2-3× per pair (the q56
-      // finding). Pair-grain.
-      .localCheckpoint(false)
+    // materialize before the threshold filter and sort: CollapseProject
+    // otherwise inlines the shingle-set kernel into the Filter predicate
+    // and the post-sort projection, paying it 2-3× per pair (the q56
+    // finding). Pair-grain, and threshold-free: every threshold reads
+    // the one seam.
+    val scored = graft.PlanCache.cached(spark, s"dedup.ngramJaccard:$dir") {
+      val cand = candidatePairs(spark, dir)
+      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+      cand
+        .join(docs.select(col("doc_id").as("doc_a"), col("text").as("ta")), Seq("doc_a"))
+        .join(docs.select(col("doc_id").as("doc_b"), col("text").as("tb")), Seq("doc_b"))
+        .select(col("doc_a"), col("doc_b"),
+          round(graft.functions.HashExpressions.ngramJaccard(col("ta"), col("tb")), 6)
+            .as("jaccard"))
+    }
+    scored
       .filter(col("jaccard") >= threshold)
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -539,15 +542,16 @@ object Dedup {
     // reads (Bench passes, downstream consumers) pay the kernel once
     val truePairs = graft.PlanCache.cached(spark,
       s"dedup.lshTruth:$threshold:$dir") {
-      docs.join(broadcast(probes), col("doc_id") =!= col("pa"))
-        .select(least(col("pa"), col("doc_id")).as("doc_a"),
-          greatest(col("pa"), col("doc_id")).as("doc_b"),
-          round(graft.functions.HashExpressions.ngramJaccard(col("pt"), col("text")), 6)
-            .as("j"))
-        // materialize before the threshold filter: the filter otherwise
-        // re-inlines the |probes|×corpus Jaccard kernel (the q56
-        // finding) — this halves the seam's one-time build cost
-        .localCheckpoint(false)
+      // materialize before the threshold filter: the filter otherwise
+      // re-inlines the |probes|×corpus Jaccard kernel (the q56
+      // finding) — this halves the seam's one-time build cost
+      graft.PlanCache.cached(spark, s"dedup.lshProbeJaccard:$dir") {
+        docs.join(broadcast(probes), col("doc_id") =!= col("pa"))
+          .select(least(col("pa"), col("doc_id")).as("doc_a"),
+            greatest(col("pa"), col("doc_id")).as("doc_b"),
+            round(graft.functions.HashExpressions.ngramJaccard(col("pt"), col("text")), 6)
+              .as("j"))
+      }
         .filter(col("j") >= threshold)
         // two probes can generate the same pair (both ends probed)
         .groupBy(col("doc_a"), col("doc_b")).agg(max(col("j")).as("j"))
@@ -728,26 +732,28 @@ object Dedup {
     * through the banding shuffles). */
   def editDistanceNearDup(spark: SparkSession, dir: String,
                           maxDist: Int = 20): DataFrame = {
-    val cand = candidatePairs(spark, dir)
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    cand
-      .join(docs.select(col("doc_id").as("doc_a"), col("text").as("ta")), Seq("doc_a"))
-      .join(docs.select(col("doc_id").as("doc_b"), col("text").as("tb")), Seq("doc_b"))
-      // |len(a)-len(b)| is an exact lower bound on edit distance: prune
-      // before paying the per-pair DP at all
-      .filter(abs(length(col("ta")) - length(col("tb"))) <= maxDist)
-      // thresholded levenshtein runs the banded O(len·maxDist) algorithm
-      // and early-exits past the bound (returns -1), instead of the full
-      // O(len²) table — same kept pairs, same distances, since every pair
-      // beyond maxDist is filtered out either way.
-      .select(col("doc_a"), col("doc_b"),
-        levenshtein(col("ta"), col("tb"), maxDist).cast("long").as("edit_dist"))
-      // materialization point BEFORE the threshold filter and the sort:
-      // CollapseProject otherwise inlines the levenshtein into the
-      // Filter predicate AND the post-sort projection, paying the DP
-      // 2-3× per pair (measured 1.03 → 0.41 s; the §4.4 duplicate-
-      // evaluation trap, expression flavor). Pair-grain, ≤|candidates|.
-      .localCheckpoint(false)
+    // materialization point BEFORE the threshold filter and the sort:
+    // CollapseProject otherwise inlines the levenshtein into the
+    // Filter predicate AND the post-sort projection, paying the DP
+    // 2-3× per pair (measured 1.03 → 0.41 s; the §4.4 duplicate-
+    // evaluation trap, expression flavor). Pair-grain, ≤|candidates|.
+    val scored = graft.PlanCache.cached(spark, s"dedup.editDist:$maxDist:$dir") {
+      val cand = candidatePairs(spark, dir)
+      val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+      cand
+        .join(docs.select(col("doc_id").as("doc_a"), col("text").as("ta")), Seq("doc_a"))
+        .join(docs.select(col("doc_id").as("doc_b"), col("text").as("tb")), Seq("doc_b"))
+        // |len(a)-len(b)| is an exact lower bound on edit distance: prune
+        // before paying the per-pair DP at all
+        .filter(abs(length(col("ta")) - length(col("tb"))) <= maxDist)
+        // thresholded levenshtein runs the banded O(len·maxDist) algorithm
+        // and early-exits past the bound (returns -1), instead of the full
+        // O(len²) table — same kept pairs, same distances, since every pair
+        // beyond maxDist is filtered out either way.
+        .select(col("doc_a"), col("doc_b"),
+          levenshtein(col("ta"), col("tb"), maxDist).cast("long").as("edit_dist"))
+    }
+    scored
       .filter(col("edit_dist") >= 0 && col("edit_dist") <= maxDist)
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -986,7 +992,7 @@ object Dedup {
     // dedupClusters' union + anti-join double reference) reuse ONE chain
     graft.PlanCache.cached(spark,
       s"dedup.labels:$threshold:$rounds:$dir") {
-      runPropagation(edges, rounds)
+      runPropagation(edges, rounds, s"dedup.rounds:$threshold:$dir")
     }
   }
 
@@ -1009,22 +1015,26 @@ object Dedup {
     val edges = clusterEdges(spark, dir, threshold)
     graft.PlanCache.cached(spark,
       s"dedup.labelsAuto:$threshold:$maxRounds:$dir") {
-      runPropagationAuto(edges, maxRounds)._1
+      runPropagationAuto(edges, maxRounds, s"dedup.rounds:$threshold:$dir")._1
     }
   }
 
   /** Min-label propagation over an arbitrary candidate-pair list
     * (doc_a, doc_b) for `rounds` rounds — the loop [[dedupClusters]]
     * runs, exposed so tests (and users with their own similarity
-    * metric) can drive it on any edge set. */
+    * metric) can drive it on any edge set. A caller's pair list has no
+    * stable name, so its round seams are keyed per call and live until
+    * `PlanCache.clear`. */
   def propagateLabels(pairs: DataFrame, rounds: Int): DataFrame =
-    runPropagation(symEdges(pairs), rounds)
+    runPropagation(symEdges(pairs), rounds, callKey())
 
   /** [[propagateLabels]] with convergence detection: returns the labels
     * plus the number of rounds actually run (the converging round — the
     * one that changed nothing — included). */
   def propagateLabelsAuto(pairs: DataFrame, maxRounds: Int = 64): (DataFrame, Int) =
-    runPropagationAuto(symEdges(pairs), maxRounds)
+    runPropagationAuto(symEdges(pairs), maxRounds, callKey())
+
+  private def callKey(): String = s"dedup.propagate:${java.util.UUID.randomUUID()}"
 
   /** The persisted component-edge list both propagation entry points
     * share: thresholded candidate pairs symmetrized with members-only
@@ -1058,34 +1068,37 @@ object Dedup {
       .groupBy(col("a")).agg(min(col("label")).as("label"))
       .select(col("a").as("doc_id"), col("label"))
 
-  private def runPropagation(edges: DataFrame, rounds: Int): DataFrame = {
+  /** Round `i`'s labels as a seam under `key` (which names the edges). */
+  private def roundSeam(edges: DataFrame, key: String, i: Int)(
+      labels: => DataFrame): DataFrame =
+    graft.PlanCache.cached(edges.sparkSession, s"$key:round$i")(labels)
+
+  private def runPropagation(edges: DataFrame, rounds: Int, key: String): DataFrame = {
     var labels = initialLabels(edges)
-    for (_ <- 1 to rounds) {
-      // per-round lineage TRUNCATION (localCheckpoint, lazy): each
-      // round's logical plan is a one-join tree over a LogicalRDD, not
-      // an `rounds`-deep nesting of every earlier round. Without this,
-      // Catalyst and the CacheManager's canonicalized cache-lookup
-      // re-walk the whole unrolled tree per execution — measured 64 s
-      // (vs ~1 s) for q64 inside a fully-loaded 70-query session. This
-      // is the persisted-loop shape GraphX's Pregel uses per superstep;
-      // on a fault-tolerant cluster run you'd persist/checkpoint
-      // reliably instead of locally.
-      labels = propagationRound(edges, labels).localCheckpoint(eager = false)
+    for (i <- 1 to rounds) {
+      // a seam per round: each round's logical plan is a one-join tree
+      // over the previous round's cached leaf, not an `rounds`-deep
+      // nesting of every earlier round. Without this, Catalyst and the
+      // CacheManager's canonicalized cache-lookup re-walk the whole
+      // unrolled tree per execution — measured 64 s (vs ~1 s) for q64
+      // inside a fully-loaded 70-query session. This is the
+      // persisted-loop shape GraphX's Pregel uses per superstep; a lost
+      // block is rebuilt from the round's cached plan.
+      labels = roundSeam(edges, key, i)(propagationRound(edges, labels))
     }
     labels
   }
 
-  private def runPropagationAuto(edges: DataFrame,
-                                 maxRounds: Int): (DataFrame, Int) = {
-    // EAGER checkpoints here: each round's labels are read twice (the
-    // changed-count action and the next round's join), so materializing
-    // once is cheaper than recomputing, and the changed-count is then a
-    // join of two in-memory tables
-    var labels = initialLabels(edges).localCheckpoint()
+  private def runPropagationAuto(edges: DataFrame, maxRounds: Int,
+                                 key: String): (DataFrame, Int) = {
+    // each round's labels are read twice (the changed-count action and
+    // the next round's join), so the count fills the round's seam once
+    // and the changed-count is a join of two in-memory tables
+    var labels = roundSeam(edges, key, 0)(initialLabels(edges))
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {
-      val next = propagationRound(edges, labels).localCheckpoint()
+      val next = roundSeam(edges, key, round + 1)(propagationRound(edges, labels))
       val changed = next
         .join(labels.withColumnRenamed("label", "prev"), Seq("doc_id"))
         .filter(col("label") =!= col("prev")).count()

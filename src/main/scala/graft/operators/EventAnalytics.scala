@@ -2289,17 +2289,19 @@ object EventAnalytics {
     // perUser is read six times (two quartiled legs × {hist, n, final
     // join}) — without a materialization point each reference re-ran
     // the purchase scan + collapse (28 exchanges in the executed
-    // plan). User-grain, so lineage truncation is the q64/q225 rule
-    // (§2.4 share one exchange).
-    val perUser = ev.crossJoin(broadcast(mid))
-      .withColumn("period", when(col("day") <= col("cut"), 1L).otherwise(2L))
-      .groupBy(col("user_id"), col("period"))
-      .agg(sum(col("cents")).as("spend"))
-      .localCheckpoint(false)
+    // plan). User-grain, so a seam is the q64/q225 rule (§2.4 share
+    // one exchange).
+    val perUser = graft.PlanCache.cached(spark, s"events.migrationSpend:$dir") {
+      ev.crossJoin(broadcast(mid))
+        .withColumn("period", when(col("day") <= col("cut"), 1L).otherwise(2L))
+        .groupBy(col("user_id"), col("period"))
+        .agg(sum(col("cents")).as("spend"))
+    }
     def quartiled(p: Long): DataFrame = {
       val u = perUser.filter(col("period") === p)
-      val hist = u.groupBy(col("spend")).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(false)
+      val hist = graft.PlanCache.cached(spark, s"events.migrationHist:$p:$dir") {
+        u.groupBy(col("spend")).agg(count(lit(1)).as("cnt"))
+      }
       val n = u.agg(count(lit(1)).as("n"))
       // boundary q (1..3) = smallest spend with cum >= (q·n+3) div 4;
       // cum via the q167-style triangle fold (audit-sized histogram)
@@ -3136,26 +3138,28 @@ object EventAnalytics {
     // times (dec, decTot, decB): without a materialization point every
     // reference re-ran the whole upstream collapse (~6 recomputations,
     // 20 exchanges in the executed plan). Both tables are audit-sized
-    // (|distinct scores| / ≤10 rows), so lineage truncation is the
-    // q64/q261 rule, not a corpus-scale persist (§2.4).
-    val hist = per.crossJoin(broadcast(tot))
-      .select(col("score"),
-        when(col("n_purch") * col("n_users_t") > col("tot_purch"), 1L)
-          .otherwise(0L).as("pos"))
-      .groupBy(col("score"))
-      .agg(count(lit(1)).as("nu"), sum(col("pos")).as("np"))
-      .localCheckpoint(false)
+    // (|distinct scores| / ≤10 rows), so the seams are the q64/q261
+    // rule (§2.4).
+    val hist = graft.PlanCache.cached(spark, s"events.decileHist:$dir") {
+      per.crossJoin(broadcast(tot))
+        .select(col("score"),
+          when(col("n_purch") * col("n_users_t") > col("tot_purch"), 1L)
+            .otherwise(0L).as("pos"))
+        .groupBy(col("score"))
+        .agg(count(lit(1)).as("nu"), sum(col("pos")).as("np"))
+    }
     val histB = hist.select(col("score").as("s2"), col("nu").as("nu2"))
-    val dec = hist
-      .join(broadcast(histB), col("s2") >= col("score"))
-      .groupBy(col("score"), col("nu"), col("np"))
-      .agg(sum(col("nu2")).as("cum_u"))
-      .crossJoin(broadcast(tot))
-      .select(expr("(10 * (cum_u - 1)) div n_users_t + 1").as("decile"),
-        col("nu"), col("np"))
-      .groupBy(col("decile"))
-      .agg(sum(col("nu")).as("n_users"), sum(col("np")).as("n_pos"))
-      .localCheckpoint(false)
+    val dec = graft.PlanCache.cached(spark, s"events.deciles:$dir") {
+      hist
+        .join(broadcast(histB), col("s2") >= col("score"))
+        .groupBy(col("score"), col("nu"), col("np"))
+        .agg(sum(col("nu2")).as("cum_u"))
+        .crossJoin(broadcast(tot))
+        .select(expr("(10 * (cum_u - 1)) div n_users_t + 1").as("decile"),
+          col("nu"), col("np"))
+        .groupBy(col("decile"))
+        .agg(sum(col("nu")).as("n_users"), sum(col("np")).as("n_pos"))
+    }
     val decTot = dec.agg(sum(col("n_users")).as("tot_u"),
       sum(col("n_pos")).as("tot_pos"))
     val decB = dec.select(col("decile").as("d2"),
@@ -3797,9 +3801,9 @@ object EventAnalytics {
     // array sort is over ≤3 elements; (b) `tot` re-ran the whole
     // corpus pipeline (the before-plan carries the scan→window→collect
     // subtree TWICE — AQE exchange reuse does not cover the diverging
-    // agg/top-k legs), so the |types|³-bounded path table is
-    // lineage-truncated once and both the top-k and the total read it
-    // (the q64/q213 audit-grain materialization rule).
+    // agg/top-k legs), so the |types|³-bounded path table is a seam
+    // both the top-k and the total read (the q64/q213 audit-grain
+    // materialization rule); it does not depend on `k`.
     val paths = Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
@@ -3817,9 +3821,10 @@ object EventAnalytics {
           "e -> e.event_type)"), ">").as("path"),
         max(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("converts"))
-    val byPath = paths.groupBy(col("path"))
-      .agg(count(lit(1)).as("n_sessions"), sum(col("converts")).as("n_convert"))
-      .localCheckpoint(eager = false)
+    val byPath = graft.PlanCache.cached(spark, s"events.sessionPaths:$dir") {
+      paths.groupBy(col("path"))
+        .agg(count(lit(1)).as("n_sessions"), sum(col("converts")).as("n_convert"))
+    }
     val tot = byPath.agg(sum(col("n_sessions")).as("n_tot"))
     byPath
       .orderBy(col("n_sessions").desc, col("path"))

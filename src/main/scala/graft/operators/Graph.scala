@@ -509,7 +509,7 @@ object Graph {
     val deg0 = degrees(spark, dir)
     val perK = KCoreKs.map { k =>
       var d = deg0
-      for (_ <- 1 to KCoreRounds) {
+      for (i <- 1 to KCoreRounds) {
         val rm = d.filter(col("d") < k).select(col("u").as("rm"))
         // rm is node-dimension-bounded; the broadcast keeps the edge
         // side exchange-free and lets AQE's empty-relation propagation
@@ -518,11 +518,12 @@ object Graph {
         // one line that flips to a shuffle join.
         val losses = e.join(broadcast(rm), col("v") === col("rm"))
           .groupBy(col("u")).agg(count(lit(1)).as("lost"))
-        d = d.filter(col("d") >= k)
-          .join(losses, Seq("u"), "left")
-          .select(col("u"),
-            (col("d") - coalesce(col("lost"), lit(0L))).as("d"))
-          .localCheckpoint(false)
+        d = graft.PlanCache.cached(spark, s"graph.kCore:$k:round$i:$dir") {
+          d.filter(col("d") >= k)
+            .join(losses, Seq("u"), "left")
+            .select(col("u"),
+              (col("d") - coalesce(col("lost"), lit(0L))).as("d"))
+        }
       }
       d.agg(count(lit(1)).as("n_core_nodes"),
         coalesce(sum(col("d")), lit(0L)).as("dir_edges"),

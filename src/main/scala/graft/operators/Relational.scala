@@ -2725,13 +2725,14 @@ object Relational {
     }
     val mx = pr.agg(max(col("rev")).as("maxr"))
     // cells is read three times (triangle left side, `hi`, `tot`) —
-    // lineage-truncate the ≤1000-row grid once instead of re-running
+    // a seam materializes the ≤1000-row grid once instead of re-running
     // the crossJoin+collapse per reference (§2.4)
-    val cells = pr.crossJoin(broadcast(mx))
-      .select(expr("rev * 1000 div maxr").as("cell"), col("rev"))
-      .groupBy(col("cell"))
-      .agg(count(lit(1)).as("cell_parts"), sum(col("rev")).as("mass"))
-      .localCheckpoint(false)
+    val cells = graft.PlanCache.cached(spark, s"relational.abcCells:$dir") {
+      pr.crossJoin(broadcast(mx))
+        .select(expr("rev * 1000 div maxr").as("cell"), col("rev"))
+        .groupBy(col("cell"))
+        .agg(count(lit(1)).as("cell_parts"), sum(col("rev")).as("mass"))
+    }
     val tot = cells.agg(sum(col("mass")).as("total"))
     val hi = cells.select(col("cell").as("c2"), col("mass").as("m2"))
     cells.join(broadcast(hi), col("c2") > col("cell"), "left")

@@ -765,20 +765,21 @@ object Similarity {
           .orderBy(col("h"), col("vec_id")).limit(KmClusters))
         .select(col("cid"), col("v").as("cv"))
         .withColumn("cnrm", sqrt(dot(col("cv"), col("cv"))))
-      for (_ <- 1 to KmIters) {
+      for (i <- 1 to KmIters) {
         val upd = assignStep(e, c).groupBy(col("cid"))
           .agg(mean(col("v")).as("craw"))
           .select(col("cid"),
             transform(col("craw"), x => round(x, 4) + roundHalf).as("ucv"))
-        c = c.select(col("cid"), col("cv").as("pcv"))
-          .join(upd, Seq("cid"), "left")
-          .select(col("cid"), coalesce(col("ucv"), col("pcv")).as("cv"))
-          .withColumn("cnrm", sqrt(dot(col("cv"), col("cv"))))
-          // `c` is referenced TWICE per iteration (assignStep + the
-          // coalesce-previous join), so the unrolled plan DOUBLES each
-          // round — lazy per-iteration lineage truncation keeps the
-          // first materialization linear (same fix as q64's propagation)
-          .localCheckpoint(eager = false)
+        // `c` is referenced TWICE per iteration (assignStep + the
+        // coalesce-previous join), so the unrolled plan DOUBLES each
+        // round — a seam per iteration keeps the first materialization
+        // linear (same fix as q64's propagation)
+        c = graft.PlanCache.cached(spark, s"sim.kmCents:$dir:iter$i") {
+          c.select(col("cid"), col("cv").as("pcv"))
+            .join(upd, Seq("cid"), "left")
+            .select(col("cid"), coalesce(col("ucv"), col("pcv")).as("cv"))
+            .withColumn("cnrm", sqrt(dot(col("cv"), col("cv"))))
+        }
       }
       c
     }
@@ -1216,19 +1217,20 @@ object Similarity {
             .orderBy(col("h"), col("vec_id")).limit(PqK))
           .select(col("cid"), col("sv").as("cv"))
           .withColumn("cn2", dot(col("cv"), col("cv")))
-        for (_ <- 1 to PqIters) {
+        for (i <- 1 to PqIters) {
           val upd = pqAssign(es, c).groupBy(col("cid"))
             .agg(mean(col("sv")).as("craw"))
             .select(col("cid"),
               transform(col("craw"), x => round(x, 4) + roundHalf).as("ucv"))
-          c = c.select(col("cid"), col("cv").as("pcv"))
-            .join(upd, Seq("cid"), "left")
-            .select(col("cid"), coalesce(col("ucv"), col("pcv")).as("cv"))
-            .withColumn("cn2", dot(col("cv"), col("cv")))
-            // same double-reference-per-iteration shape as the IVF loop
-            // (×PqM subspaces here) — truncate or the union of 8 unrolled
-            // chains dominates q70's first materialization
-            .localCheckpoint(eager = false)
+          // same double-reference-per-iteration shape as the IVF loop
+          // (×PqM subspaces here) — cut per iteration or the union of 8
+          // unrolled chains dominates q70's first materialization
+          c = graft.PlanCache.cached(spark, s"sim.pqCents:$dir:m$m:iter$i") {
+            c.select(col("cid"), col("cv").as("pcv"))
+              .join(upd, Seq("cid"), "left")
+              .select(col("cid"), coalesce(col("ucv"), col("pcv")).as("cv"))
+              .withColumn("cn2", dot(col("cv"), col("cv")))
+          }
         }
         c.select(lit(m).as("m"), col("cid"), col("cv"), col("cn2"))
       }.reduce(_ unionByName _)

@@ -2971,17 +2971,18 @@ object TextAnalysis {
     val other = sizes.select(col("source").as("s2"), col("n_tok").as("t2"))
     // ROUND-18 SHAVE (§2.4): `ranked` feeds the novel-credit join AND
     // the cells assembly AND (via cells) the cumulative prior self-join
-    // — uncheckpointed, the before-plan inlined this |sources|-row
+    // — without a cut, the before-plan inlined this |sources|-row
     // subtree (and the seam scan + sizes aggregation under it) four
     // times (741-line explain). Both it and `cells` below are
     // source-grain (audit-bounded at any corpus size), so they take the
-    // q64/q213 lineage truncation.
-    val ranked = sizes.join(broadcast(other),
-        col("t2") > col("n_tok") ||
-          (col("t2") === col("n_tok") && col("s2") < col("source")), "left")
-      .groupBy(col("source"), col("n_tok"), col("vocab"))
-      .agg((count(col("s2")) + 1).as("rank"))
-      .localCheckpoint(eager = false)
+    // q64/q213 seam.
+    val ranked = graft.PlanCache.cached(spark, s"textanalysis.noveltyRanked:$dir") {
+      sizes.join(broadcast(other),
+          col("t2") > col("n_tok") ||
+            (col("t2") === col("n_tok") && col("s2") < col("source")), "left")
+        .groupBy(col("source"), col("n_tok"), col("vocab"))
+        .agg((count(col("s2")) + 1).as("rank"))
+    }
     // each hash credits the best-ranked source containing it
     val novel = hist.select(col("source"), col("h"))
       .join(broadcast(ranked.select(col("source"), col("rank"))),
@@ -2990,9 +2991,10 @@ object TextAnalysis {
       .groupBy(col("rank")).agg(count(lit(1)).as("novel"))
     // LEFT join: a fully redundant source mints ZERO types and must
     // still report its row
-    val cells = ranked.join(novel, Seq("rank"), "left")
-      .withColumn("novel", coalesce(col("novel"), lit(0L)))
-      .localCheckpoint(eager = false)
+    val cells = graft.PlanCache.cached(spark, s"textanalysis.noveltyCells:$dir") {
+      ranked.join(novel, Seq("rank"), "left")
+        .withColumn("novel", coalesce(col("novel"), lit(0L)))
+    }
     val prior = cells.select(col("rank").as("r2"), col("novel").as("v2"))
     cells.join(broadcast(prior), col("r2") <= col("rank"))
       .groupBy(col("rank"), col("source"), col("n_tok"), col("vocab"),
@@ -4242,23 +4244,25 @@ object TextAnalysis {
     * table: per step one pair-count shuffle over (lang, a, b) cells, a
     * per-lang top-1 window over audit-sized cells, and a broadcast
     * (≤|langs| rows) merge join. Each iterate is referenced twice
-    * (pair count + merge), so every step is lineage-truncated with
-    * `localCheckpoint(eager = false)` (the q64/q261 materialization
-    * rule; the oracle marks each step's CTE `AS MATERIALIZED`). */
+    * (pair count + merge), so every step is a PlanCache seam keyed by
+    * its step (the q64/q261 materialization rule; the oracle marks each
+    * step's CTE `AS MATERIALIZED`). A step's seams depend on the step,
+    * not on `k`, so ladders of different lengths share their rungs. */
   def bpeMergeLadder(spark: SparkSession, dir: String,
                      k: Int = BpeLadderSteps): DataFrame = {
     require(k > 0, s"bpeMergeLadder: k must be positive ($k)")
     val sep = "\u001f"
-    var types = Tables.documents(spark, dir)
-      .select(col("lang"), explode(TextHash.tokens(col("text"))).as("w"))
-      .filter(length(col("w")) >= 1 && !col("w").contains(sep))
-      .groupBy(col("lang"), col("w")).agg(count(lit(1)).as("cnt"))
-      .select(col("lang"), col("cnt"),
-        concat(lit(sep),
-          array_join(expr("transform(sequence(1, length(w)), " +
-            "i -> substr(w, i, 1))"), sep + sep),
-          lit(sep)).as("ws"))
-      .localCheckpoint(eager = false)
+    var types = graft.PlanCache.cached(spark, s"textanalysis.bpeTypes:$dir:step0") {
+      Tables.documents(spark, dir)
+        .select(col("lang"), explode(TextHash.tokens(col("text"))).as("w"))
+        .filter(length(col("w")) >= 1 && !col("w").contains(sep))
+        .groupBy(col("lang"), col("w")).agg(count(lit(1)).as("cnt"))
+        .select(col("lang"), col("cnt"),
+          concat(lit(sep),
+            array_join(expr("transform(sequence(1, length(w)), " +
+              "i -> substr(w, i, 1))"), sep + sep),
+            lit(sep)).as("ws"))
+    }
     var winners = Vector.empty[DataFrame]
     for (step <- 1 to k) {
       val pairs = types
@@ -4278,29 +4282,31 @@ object TextAnalysis {
       // use (min_by on (-pcnt, a, b) — count desc, pair asc; (a, b) is
       // unique per lang so the election is deterministic), riding a
       // plain map-side-combinable aggregation with no sort.
-      val win = pairs
-        .groupBy(col("lang"), col("a"), col("b"))
-        .agg(sum(col("cnt")).as("pcnt"))
-        .groupBy(col("lang"))
-        .agg(min_by(struct(col("a"), col("b"), col("pcnt")),
-          struct((lit(0L) - col("pcnt")).as("np"), col("a"), col("b")))
-          .as("m"))
-        .select(col("lang"), col("m.a").as("a"), col("m.b").as("b"),
-          col("m.pcnt").as("pcnt"))
-        .localCheckpoint(eager = false)
+      val win = graft.PlanCache.cached(spark, s"textanalysis.bpeWin:$dir:step$step") {
+        pairs
+          .groupBy(col("lang"), col("a"), col("b"))
+          .agg(sum(col("cnt")).as("pcnt"))
+          .groupBy(col("lang"))
+          .agg(min_by(struct(col("a"), col("b"), col("pcnt")),
+            struct((lit(0L) - col("pcnt")).as("np"), col("a"), col("b")))
+            .as("m"))
+          .select(col("lang"), col("m.a").as("a"), col("m.b").as("b"),
+            col("m.pcnt").as("pcnt"))
+      }
       winners = winners :+ win.withColumn("step", lit(step.toLong))
       // ROUND-18 SHAVE: the merged segmentation after the LAST rung is
-      // never read (only the winners are) — skip its join + checkpoint
+      // never read (only the winners are) — skip its join + seam
       // entirely (was one dead corpus-vocab replace pass + one dead
       // plan compilation per run).
-      if (step < k) types = types
-        .join(broadcast(win.select(col("lang"), col("a"), col("b"))),
-          Seq("lang"), "left")
-        .select(col("lang"), col("cnt"),
-          when(col("a").isNull, col("ws")).otherwise(
-            expr("replace(ws, concat(char(31), a, char(31), char(31), " +
-              "b, char(31)), concat(char(31), a, b, char(31)))")).as("ws"))
-        .localCheckpoint(eager = false)
+      if (step < k) types = graft.PlanCache.cached(spark, s"textanalysis.bpeTypes:$dir:step$step") {
+        types
+          .join(broadcast(win.select(col("lang"), col("a"), col("b"))),
+            Seq("lang"), "left")
+          .select(col("lang"), col("cnt"),
+            when(col("a").isNull, col("ws")).otherwise(
+              expr("replace(ws, concat(char(31), a, char(31), char(31), " +
+                "b, char(31)), concat(char(31), a, b, char(31)))")).as("ws"))
+      }
     }
     winners.reduce(_ unionByName _)
       .select(col("lang"), col("step"), col("a").as("left_sym"),

@@ -394,12 +394,6 @@ object Pipeline {
     else tweetsFromPayload(raw, spec.payloadCol)
   }
 
-  /** S1 (file replay, kept for callers of the round-1 signature). */
-  def readTweetStream(spark: SparkSession, dir: String,
-                      maxFilesPerTrigger: Int = 10): DataFrame =
-    readTweets(spark, SourceSpec("json", path = Some(dir),
-      options = Map("maxFilesPerTrigger" -> maxFilesPerTrigger.toString)))
-
   /** F1+F2: language equality + case-insensitive track match — Twitter
     * `track` semantics (`streamer.py:48`): match in the text OR in the
     * hashtag entities (# optional). */

@@ -71,6 +71,7 @@ object StreamDemo {
         .orderBy("source")
         .show(30, truncate = false)
       spark.stop()
+      graft.PlanCache.deleteTree(curBase)
       return
     }
 
@@ -93,7 +94,8 @@ object StreamDemo {
       .write.mode("overwrite").text(src)
 
     val scored = Pipeline.scoreTweets(
-      Pipeline.readTweetStream(spark, src), lang, track)
+      Pipeline.readTweets(spark, Pipeline.SourceSpec("json", path = Some(src))),
+      lang, track)
     val counts = Pipeline.sentimentCounts(scored,
       windowLen = "5 minutes", watermark = "30 seconds")
     def startQuery() = Pipeline.writeParquet(counts, out, chk, Trigger.AvailableNow())
@@ -126,5 +128,6 @@ object StreamDemo {
         .show(50, truncate = false)
     }
     spark.stop()
+    graft.PlanCache.deleteTree(base)
   }
 }

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 /** Minimal bridge into `private[sql]` Column↔Expression conversion —
   * the two calls a Spark-native expression library needs. This is the
@@ -42,6 +43,52 @@ object bridge {
       case _ => p.children.flatMap(planNodes)
     })
   }
+
+  /** `df` over its cached relation as a LEAF: the plan `df` was
+    * persisted from is replaced by the `InMemoryRelation` the
+    * CacheManager registered for it (`Dataset.ofRows` is private[sql]).
+    * Consumers plan against the leaf only, so the cut is also an
+    * optimizer barrier, and a lost block is rebuilt from the cached
+    * plan. The leaf states no output ordering: a self-join re-instances
+    * it, and `InMemoryRelation.newInstance` renews the output ids but
+    * not the ordering's, which then fails canonicalization. */
+  def cachedLeaf(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val leaf = ds.sparkSession.sessionState.executePlan(ds.logicalPlan).withCachedData match {
+      case r: InMemoryRelation =>
+        InMemoryRelation(r.output, r.cacheBuilder, Nil, r.statsOfPlanToCache)
+      case p => p
+    }
+    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, leaf)
+  }
+
+  /** `df` with each seam leaf it reads replaced by a flat scan of that
+    * seam's cached rows (`LogicalRDD.fromDataset` is private[sql]). A
+    * seam built over seams is persisted from this form: its cached plan
+    * then shows the seams below it as RDD scans, not as their own cached
+    * plans. Without it an iterate nests every earlier round's cached
+    * plan, and the plan description Spark renders for every action grows
+    * exponentially with the rounds (AQE prints a materialized cached
+    * plan twice, initial and final). The scan's lineage runs through the
+    * cached blocks, so a lost block is still recomputed from the seam's
+    * cached plan. Creating the scan's RDD runs the seam's shuffle stages,
+    * as a lazy checkpoint did when it was built. */
+  def flattenSeams(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val session = ds.sparkSession
+    val flat = ds.logicalPlan.transformUp { case r: InMemoryRelation =>
+      val seam = org.apache.spark.sql.classic.Dataset.ofRows(session, r)
+      org.apache.spark.sql.execution.LogicalRDD.fromDataset(
+        seam.queryExecution.toRdd, seam, isStreaming = false)
+    }
+    if (flat eq ds.logicalPlan) df
+    else org.apache.spark.sql.classic.Dataset.ofRows(session, flat)
+  }
+
+  /** Whether `df` is such a leaf already. */
+  def isCachedLeaf(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan
+      .isInstanceOf[InMemoryRelation]
 
   /** Stable unique id for a session instance (`sessionUUID` is
     * private[sql]) — unlike identityHashCode, never collides between two

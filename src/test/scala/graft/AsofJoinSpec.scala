@@ -12,7 +12,7 @@ class AsofJoinSpec extends SparkSpec {
   private def nanos(sec: Long): Long = sec * 1000000000L
 
   test("as-of join: hand-computed matches, inclusive ties, null when none precedes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_asof").toString
+    val dir = tempDir("graft_asof").toString
     // (event_id, ts_nanos, user_id, event_type, value, props)
     Seq(
       (10L, nanos(100), 1L, "purchase", 5.0, "{}"),

@@ -17,7 +17,7 @@ import graft.streaming.LocalCheckpointFileManager
   * those of Spark's default manager. */
 class CheckpointFileManagerSpec extends SparkSpec {
 
-  private def dir(): String = Files.createTempDirectory("graft_cfm").toString
+  private def dir(): String = tempDir("graft_cfm").toString
 
   private def manager(d: String): CheckpointFileManager =
     CheckpointFileManager.create(new Path(d), bridge.newHadoopConf(spark))

@@ -52,8 +52,7 @@ class CurationPipelineSpec extends SparkSpec {
   }
 
   test("materialize writes a split-partitioned layout a trainer prunes on") {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft_curated").toString
+    val out = tempDir("graft_curated").toString
     CurationPipeline.materialize(spark, sf0001, out,
       minQuality = 0.3, ctxLen = 64, nShards = 4)
     val back = spark.read.parquet(out)

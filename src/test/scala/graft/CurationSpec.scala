@@ -347,7 +347,7 @@ class CurationSpec extends SparkSpec {
     assert(audit.map(_.toString).sameElements(again.map(_.toString)))
     // skewed fixture: src19 (10 docs, weight .02) binds -> kept whole;
     // src0 (90 docs, weight .08) downsamples at rate C*w/n = 500*.08/90
-    val dir = java.nio.file.Files.createTempDirectory("graft_mix").toString
+    val dir = tempDir("graft_mix").toString
     val rows = (0L until 90L).map(i => (i, s"doc $i body", "en", "src0")) ++
       (100L until 110L).map(i => (i, s"doc $i body", "en", "src19"))
     rows.toDF("doc_id", "text", "lang", "source")
@@ -373,7 +373,7 @@ class CurationSpec extends SparkSpec {
       (11L, "omega sigma kappa lambda omega sigma", "en", "poolB"),
       (12L, "sigma kappa omega lambda kappa omega", "en", "poolB"),
       (13L, "zeta eta theta iota zeta eta", "en", "poolB"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsir").toString
+    val dir = tempDir("graft_dsir").toString
     rows.toDF("doc_id", "text", "lang", "source")
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
         length(col("text")).cast("long").as("n_chars"))
@@ -471,7 +471,7 @@ class CurationSpec extends SparkSpec {
     assert(rows.map(_.getAs[Long]("n_leaky")).sum > 0)
     // exact duplicates share text, hash, and therefore split: a twin-only
     // corpus has components but can never leak
-    val dir = java.nio.file.Files.createTempDirectory("graft_leak").toString
+    val dir = tempDir("graft_leak").toString
     val t = "w1 w2 w3 w4 w5 w6 w7 w8"
     Seq((1L, t, "en", "src0"), (2L, t, "en", "src0"))
       .toDF("doc_id", "text", "lang", "source")
@@ -529,7 +529,7 @@ class CurationSpec extends SparkSpec {
     // fixture: doc 2 (old) and doc 3 (new) share text; doc 4 (old) is
     // retired; doc 5 (new) is minted. New side is higher quality.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cdiff").toString
+    val dir = tempDir("graft_cdiff").toString
     Seq((2L, "alpha beta gamma delta", "en", "src0"),
         (3L, "alpha beta gamma delta", "en", "src0"),
         (4L, "the the the the", "en", "src0"),
@@ -562,7 +562,7 @@ class CurationSpec extends SparkSpec {
     // hand fixture: doc 0 is the benchmark; doc 10 leaks a bench 5-gram,
     // docs 11/12 are exact dups, doc 13 is clean and unique
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_evalset").toString
+    val dir = tempDir("graft_evalset").toString
     Seq((0L, "b1 b2 b3 b4 b5 b6", "en", "src0"),
         (10L, "x b1 b2 b3 b4 b5 y", "en", "src0"),
         (11L, "c1 c2 c3 c4 c5 c6", "en", "src0"),
@@ -785,7 +785,7 @@ class CurationSpec extends SparkSpec {
 
   test("wilsonQualityRank (q260): hand-walked bounds; 95/100 outranks 3/3") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_wilson").toString
+    val dir = tempDir("graft_wilson").toString
     // pass text: 50 distinct >=6-char non-stopword tokens -> q = 1.0;
     // fail text: stopword soup -> q ~ 0.22
     val passText = (1 to 50).map(i => f"token$i%02dxx").mkString(" ")
@@ -928,7 +928,7 @@ class CurationSpec extends SparkSpec {
       assert(r.getAs[Long]("final_share_bp") == finalBp)
     }
     // direction fixture: the low-quality (high-deficit) domain gains share
-    val dir = java.nio.file.Files.createTempDirectory("graft_doremi").toString
+    val dir = tempDir("graft_doremi").toString
     Seq(
       (1L, "alpha bravo charlie delta echo foxtrot golf hotel", "en", "good"),
       (2L, "india juliet kilo lima mike november oscar papa", "en", "good"),
@@ -953,7 +953,7 @@ class CurationSpec extends SparkSpec {
 
   test("corpus datasheet (q103): hand-computed fixture + corpus reconciliation") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_datasheet").toString
+    val dir = tempDir("graft_datasheet").toString
     Seq(
       (1L, "alpha beta gamma", "x", "srcA"),
       (2L, "alpha beta gamma", "x", "srcA"), // exact dup of doc 1
@@ -1030,7 +1030,7 @@ class CurationSpec extends SparkSpec {
 
   test("encodingHygiene (q182): injection rule, length algebra, NBSP removes nothing") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_hyg").toString
+    val dir = tempDir("graft_hyg").toString
     // doc_id drives injection: 0→FFFD, 1→BEL, 2→NBSP, 3→FFFD+ZWSP, 4→clean
     (0L to 4L).map(i => (i, "abc", "en", "t", 3L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -1050,7 +1050,7 @@ class CurationSpec extends SparkSpec {
 
   test("piiAudit (q197): injection rule, regex counts, base-text hits add in") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pii").toString
+    val dir = tempDir("graft_pii").toString
     // doc_id drives injection: 0→two emails (0%3=0, 0%9=0), 1→phone
     // (1%4=1), 2→ip (2%5=2), 8→clean, 9→two injected emails + one in
     // the base text + a phone (9%4=1)
@@ -1077,7 +1077,7 @@ class CurationSpec extends SparkSpec {
 
   test("kAnonymity (q199): class sizing, threshold sweep, negative-balance band parity") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_kanon").toString
+    val dir = tempDir("graft_kanon").toString
     // four QI classes: A = 3 rows, B = 1 (singleton), C = 2, D = 12;
     // B sits on a NEGATIVE balance to pin the +100000-shift band rule
     val rows =
@@ -1111,7 +1111,7 @@ class CurationSpec extends SparkSpec {
   test("erasureSweep (q193): cascade reaches orders and lineitem exactly") {
     import spark.implicits._
     import java.sql.Timestamp
-    val dir = java.nio.file.Files.createTempDirectory("graft_erase").toString
+    val dir = tempDir("graft_erase").toString
     val t = Timestamp.valueOf("2024-01-01 00:00:00")
     Seq((97L, "a", 1, 0.0, "m"), (1L, "b", 1, 0.0, "m"), (2L, "c", 2, 0.0, "m"))
       .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment")
@@ -1140,7 +1140,7 @@ class CurationSpec extends SparkSpec {
 
   test("lDiversity (q211): homogeneous class flagged below its row-diverse twin") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ldiv").toString
+    val dir = tempDir("graft_ldiv").toString
     // class A = (nation 1, S, band): c1 + c2, every order priority P1
     // (ldiv 1 — the homogeneity attack); class B = (nation 2, S, band):
     // c3 with priorities P1/P2/P3 (ldiv 3). 3 released rows each.
@@ -1166,7 +1166,7 @@ class CurationSpec extends SparkSpec {
 
   test("hamiltonAllocation (q222): largest remainders get the leftover, sum exact") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_hamilton").toString
+    val dir = tempDir("graft_hamilton").toString
     // counts 5 / 3 / 1 over target 7: quotas 35/9, 21/9, 7/9 → bases
     // 3, 2, 0 (sum 5); remainders 8, 3, 7 → the 2 leftover seats go to
     // s_a (rem 8) and s_c (rem 7)
@@ -1188,7 +1188,7 @@ class CurationSpec extends SparkSpec {
 
   test("neymanAllocation (q245): hand-walked weights, zero-variance stratum starves, prop leg equals q222") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_neyman").toString
+    val dir = tempDir("graft_neyman").toString
     // A: four constant-length docs (variance 0 -> weight 0); B: lengths
     // 10/20 -> S2 = 2*500 - 900 = 100 -> weight isqrt(100) = 10
     (Seq((1L, 10L), (2L, 10L), (3L, 10L), (4L, 10L)).map {
@@ -1221,7 +1221,7 @@ class CurationSpec extends SparkSpec {
 
   test("dhondtAllocation (q229): exact-proportional case seats cleanly, sums to budget") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dhondt").toString
+    val dir = tempDir("graft_dhondt").toString
     // votes 6/3/1 on 100 seats: threshold 0.1 seats exactly 60/30/10 —
     // the boundary quotient 100000 milli is a 3-way tie at ranks 97-99
     val docs = (1L to 6L).map(i => (i, "s_a")) ++
@@ -1242,7 +1242,7 @@ class CurationSpec extends SparkSpec {
 
   test("modalityCoverage (q240): per-lang coverage, orphan vectors counted once") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_modcov").toString
+    val dir = tempDir("graft_modcov").toString
     Seq((1L, "en"), (2L, "en"), (3L, "fr")).toDF("doc_id", "lang")
       .write.parquet(s"$dir/documents.parquet")
     // vec 1 and 3 match docs; 99 is a stale index orphan

@@ -158,7 +158,7 @@ class DedupSpec extends SparkSpec {
 
   /** Fixture dir with a documents.parquet in the test-table schema. */
   private def docsDir(rows: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_fix").toString
+    val dir = tempDir("graft_dedup_fix").toString
     rows.toDF("doc_id", "text")
       .select(col("doc_id"), col("text"), lit("en").as("lang"),
         lit("fixture").as("source"), length(col("text")).cast("long").as("n_chars"))
@@ -644,7 +644,7 @@ class DedupSpec extends SparkSpec {
     // different text (exact-only — the incidental-overlap regime);
     // doc 12 is clean
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fuzzcont").toString
+    val dir = tempDir("graft_fuzzcont").toString
     Seq((0L, "b1 b2 b3 b4 b5 b6 b7 b8 b9 b10", "en", "src0"),
         (10L, "b1 b2 b3 b4 b5 b6 b7 b8 b9 b10", "en", "src0"),
         (11L, "x1 x2 x3 b1 b2 b3 b4 b5 y1 y2 y3 y4 y5 y6 y7 y8 y9", "en", "src0"),
@@ -673,7 +673,7 @@ class DedupSpec extends SparkSpec {
     // signatures collapse to one sig-group, whose within-group pairs are
     // reconstructed deterministically — recall 1.0 by construction
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_lshrec").toString
+    val dir = tempDir("graft_lshrec").toString
     val shared = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
     Seq((1L, shared, "en", "src0"),
         (2L, shared, "en", "src0"),

@@ -72,7 +72,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   private def writeDocs(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_edge").toString
+    val dir = tempDir("graft_edge").toString
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -110,7 +110,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("conversion latency with no converting users is empty, no error") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_edge_ev").toString
+    val dir = tempDir("graft_edge_ev").toString
     Seq((1L, 1000000000L, 1L, "view", 0.0, "{}"),
       (2L, 2000000000L, 2L, "signup", 0.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -135,7 +135,7 @@ class EdgeCaseSpec extends SparkSpec {
     // a NULL key — the twin's LEFT JOIN matches NULL to nothing, so the
     // NULL order is an orphan row but not a key
     def audit(extraOrder: Boolean, nullCustomer: Boolean) = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_fk").toString
+      val dir = tempDir("graft_fk").toString
       def w(name: String, df: org.apache.spark.sql.DataFrame): Unit =
         df.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name.parquet")
       w("region", Seq((0, "r")).toDF("r_regionkey", "r_name"))
@@ -209,7 +209,7 @@ class EdgeCaseSpec extends SparkSpec {
     // best_other is NULL when only one label exists: the margin must not
     // NPE or mis-count — maxes over an empty other-set stay null and the
     // misaligned comparison is false
-    val dir = java.nio.file.Files.createTempDirectory("graft_edge_lp").toString
+    val dir = tempDir("graft_edge_lp").toString
     val v = Array.tabulate(64)(_.toFloat)
     (0L until 4L).map(i => (i, v, 7)).toDF("vec_id", "embedding", "label")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -299,7 +299,7 @@ class EdgeCaseSpec extends SparkSpec {
   test("round-13 batch-B event operators survive single-bucket fixtures") {
     // one day of events: every (type, day) row is day-1 → q164 empty;
     // q159 still elects exact quantiles on a single value
-    val dir = java.nio.file.Files.createTempDirectory("graft_edge_ev").toString
+    val dir = tempDir("graft_edge_ev").toString
     Seq((1L, 1000000000L, 1L, "click", 2.5, "{}"),
       (2L, 2000000000L, 2L, "click", 2.5, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -332,21 +332,21 @@ class EdgeCaseSpec extends SparkSpec {
   test("round-14 operators: degenerate single-entity inputs stay defined") {
     import spark.implicits._
     // q226: one part → cell 1000, cum_above 0 → the whole corpus is A
-    val d1 = java.nio.file.Files.createTempDirectory("graft_e_abc").toString
+    val d1 = tempDir("graft_e_abc").toString
     Seq((1L, 10.0, 0.0)).toDF("l_partkey", "l_extendedprice", "l_discount")
       .write.parquet(s"$d1/lineitem.parquet")
     val abc = graft.operators.Relational.abcClasses(spark, d1).collect()
     assert(abc.length == 1 && abc.head.getAs[String]("abc_class") == "A"
       && abc.head.getAs[Long]("share_bp") == 10000L)
     // q229: one source takes every seat at zero deviation
-    val d2 = java.nio.file.Files.createTempDirectory("graft_e_dh").toString
+    val d2 = tempDir("graft_e_dh").toString
     Seq((1L, "only")).toDF("doc_id", "source")
       .write.parquet(s"$d2/documents.parquet")
     val dh = Curation.dhondtAllocation(spark, d2).collect()
     assert(dh.length == 1 && dh.head.getAs[Long]("seats") == 100L
       && dh.head.getAs[Long]("dev_bp") == 0L)
     // q231: one source loads one worker; the other three sit at zero
-    val d3 = java.nio.file.Files.createTempDirectory("graft_e_lpt").toString
+    val d3 = tempDir("graft_e_lpt").toString
     Seq(("s", 7L)).toDF("source", "n_chars")
       .write.parquet(s"$d3/documents.parquet")
     val lpt = graft.operators.Scale.lptSchedule(spark, d3).collect()
@@ -354,7 +354,7 @@ class EdgeCaseSpec extends SparkSpec {
     assert(lpt == Map(1L -> 7L, 2L -> 0L, 3L -> 0L, 4L -> 0L))
     // q233: a single one-event session is a 1-session peak at its own
     // minute; the sweep's sentinel day equals the session day
-    val d4 = java.nio.file.Files.createTempDirectory("graft_e_peak").toString
+    val d4 = tempDir("graft_e_peak").toString
     Seq((1L, 90L * 1000000000L, 1L, "click", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$d4/events.parquet")
@@ -363,7 +363,7 @@ class EdgeCaseSpec extends SparkSpec {
       && pk.head.getAs[Long]("peak_minute_of_day") == 1L)
     // q236: an error-free corpus yields an EMPTY outcome table, not a
     // divide-by-zero
-    val d5 = java.nio.file.Files.createTempDirectory("graft_e_err").toString
+    val d5 = tempDir("graft_e_err").toString
     Seq((1L, 1000000000L, 1L, "click", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.parquet(s"$d5/events.parquet")

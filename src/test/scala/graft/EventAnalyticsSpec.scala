@@ -12,7 +12,7 @@ class EventAnalyticsSpec extends SparkSpec {
   private val day = 86400L
 
   test("funnel: first-touch ordering, inclusive ties, monotone step counts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel").toString
+    val dir = tempDir("graft_funnel").toString
     Seq(
       // user 1: full ordered funnel
       (1L, nanos(10), 1L, "signup", 0.0, "{}"),
@@ -35,7 +35,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("acfPanel (q271): hand-walked alternating series, exact ACF and Ljung-Box Q") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_acf").toString
+    val dir = tempDir("graft_acf").toString
     // one type, odd days of 1..11 active (the span anchors at the last
     // EVENT day, so N = 11), counts 4,0,4,...,4 — a period-2 series
     // whose exact sample ACF alternates sign and whose Q is far past χ²₇
@@ -67,7 +67,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("ewmaChart (q273): hand-walked phase I/II level shift, exact walk and alarms") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ewma").toString
+    val dir = tempDir("graft_ewma").toString
     // type "t": 16 days — Phase I (days 1-8) alternates 6,8 (μ=7000,
     // σ²_milli²=10⁶ → alarm beyond |dev| 1133), Phase II (days 9-16)
     // holds 14 — a sustained level shift EWMA must flag every day
@@ -102,7 +102,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("kaplanMeier (q272): hand-walked censoring ladder, exact product-limit") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_km").toString
+    val dir = tempDir("graft_km").toString
     Seq(
       // u1, u2: signup day 0 → purchase day 2 (event t=2 ×2)
       (1L, nanos(3600), 1L, "signup", 0.0, "{}"),
@@ -132,7 +132,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("calibrationAudit + brierDecomposition (q269/q270): hand-walked miscalibrated score") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_calib").toString
+    val dir = tempDir("graft_calib").toString
     Seq(
       // u1: score 4 (max) + purchase → bin 9, predicted 10000, observed pos
       (1L, nanos(1), 1L, "click", 0.0, "{}"),
@@ -178,7 +178,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("isotonicCalibration (q274): PAV pools the violating bins, fit is monotone") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_iso").toString
+    val dir = tempDir("graft_iso").toString
     // the q269 fixture: bins 0/5/9 read observed 10000/3333/10000 —
     // bin 0 (score-0 purchaser) violates monotonicity against bin 5
     Seq(
@@ -208,7 +208,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("cmhStratifiedAb (q275): hand-built Simpson reversal, exact pooled statistics") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cmh").toString
+    val dir = tempDir("graft_cmh").toString
     def h1(s: String): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes("UTF-8"))
@@ -432,7 +432,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("volume anomaly (q164): planted spike and drop flagged, steady days quiet, day-1 excluded") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_anomaly").toString
+    val dir = tempDir("graft_anomaly").toString
     // type "steady": 10/day for 9 days; day 9 spikes to 30 (+200% dev)
     // type "fade": 10/day for 4 days, then 1 on day 5 (-90% dev)
     var eid = 0L
@@ -488,7 +488,7 @@ class EventAnalyticsSpec extends SparkSpec {
     }
     // poles on a planted fixture: a perfect bundle (every 'buy' user
     // also 'pays') and a perfect split (no user does both)
-    val dir = java.nio.file.Files.createTempDirectory("graft_cooc").toString
+    val dir = tempDir("graft_cooc").toString
     var eid = 0L
     def ev(u: Long, t: String) = { eid += 1; (eid, nanos(eid), u, t, 1.0, "{}") }
     (Seq(1L, 2L).flatMap(u => Seq(ev(u, "buy"), ev(u, "pay"))) ++
@@ -588,7 +588,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("burstiness (q172): metronome at 0, planted burst exact, one-day type degenerate-0") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_burst").toString
+    val dir = tempDir("graft_burst").toString
     var eid = 0L
     val rows = (
       // "metronome": exactly 10/day for 4 days → var 0 → fano_bp 0
@@ -620,7 +620,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("attribution (q175): first vs last touch exact, direct fallback, purchase-skip rule") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_attr").toString
+    val dir = tempDir("graft_attr").toString
     Seq(
       // user 1: view → click → purchase $10 (first=view, last=click)
       (1L, nanos(10), 1L, "view", 0.0, "{}"),
@@ -655,7 +655,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("sessionization (q179): 30-min split, inclusive boundary, size bands") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess").toString
+    val dir = tempDir("graft_sess").toString
     Seq(
       // user 1: two 2-event sessions (gap 1990 s > 1800 splits)
       (1L, nanos(0), 1L, "view", 0.0, "{}"),
@@ -686,7 +686,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("robustValueStats (q180): exact trim slice, winsor clamp, rank cutoffs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_robust").toString
+    val dir = tempDir("graft_robust").toString
     var eid = 0L
     val rows =
       // type t: 1 low outlier, 18 at $1, 1 high outlier → n=20, lo=1, hi=19
@@ -718,7 +718,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("weeklySeasonality (q185): ISO weekday cells, exact independence baseline") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_season").toString
+    val dir = tempDir("graft_season").toString
     // epoch day 4 = Monday 1970-01-05 (isodow 1), day 5 = Tuesday
     def at(d: Long, h: Long, i: Long) = nanos(d * day + h * 3600 + i)
     var eid = 0L
@@ -745,7 +745,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("newVsReturning (q186): first-day election, exact daily ledger") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_newret").toString
+    val dir = tempDir("graft_newret").toString
     def at(d: Long, i: Long) = nanos(d * day + i)
     Seq(
       (1L, at(1, 10), 1L, "view", 0.0, "{}"),   // A day 1 (new)
@@ -767,7 +767,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("conversionSurvival (q188): life-table hazard and survival, exact ranks") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_surv").toString
+    val dir = tempDir("graft_surv").toString
     def at(d: Long, i: Long) = nanos(d * day + i)
     Seq(
       (1L, at(0, 10), 1L, "signup", 0.0, "{}"),
@@ -793,7 +793,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("mannKendallTrend (q189): sign algebra, negative-tau division parity") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mk").toString
+    val dir = tempDir("graft_mk").toString
     var eid = 0L
     def burst(ty: String, d: Long, n: Int) = (1 to n).map { i =>
       eid += 1; (eid, nanos(d * day + i), eid % 5, ty, 1.0, "{}")
@@ -827,7 +827,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("conversionSurvival: zero at-risk interval has hazard 0, not NULL") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_surv0").toString
+    val dir = tempDir("graft_surv0").toString
     // one user, converts on day 0 → every later interval has at_risk 0
     Seq(
       (1L, nanos(10), 1L, "signup", 0.0, "{}"),
@@ -847,7 +847,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("abReadout (q191): hash assignment partitions users; exact arm arithmetic") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ab").toString
+    val dir = tempDir("graft_ab").toString
     // 40 users, every odd user purchases $1
     val rows = (1L to 40L).flatMap { u =>
       Seq((u * 10, nanos(u), u, "view", 0.0, "{}")) ++
@@ -874,7 +874,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("stateDwell (q192): gaps attribute to the opening state, exact shares") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dwell").toString
+    val dir = tempDir("graft_dwell").toString
     Seq(
       (1L, nanos(0), 1L, "view", 0.0, "{}"),
       (2L, nanos(10), 1L, "click", 0.0, "{}"),
@@ -897,7 +897,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("runsTest (q267): regime blocks vs alternation vs flat; zero deltas dropped") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_runs").toString
+    val dir = tempDir("graft_runs").toString
     var eid = 0L
     def evs(t: String, d: Long, n: Int) = (1 to n).map { j =>
       eid += 1; (eid, nanos(d * day + j), eid % 5, t, 1.0, "{}")
@@ -929,7 +929,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("aucAudit (q266): hand-walked rank AUC with a score tie across classes") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_auc").toString
+    val dir = tempDir("graft_auc").toString
     var eid = 0L
     def user(u: Long, clicks: Int, purch: Int) =
       (1 to clicks).map { j =>
@@ -955,7 +955,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("weeklyEtaSquared (q265): pure weekly shape reads 10000; flat series reads 0") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_eta").toString
+    val dir = tempDir("graft_eta").toString
     var eid = 0L
     def evs(t: String, d: Long, n: Int) = (1 to n).map { j =>
       eid += 1; (eid, nanos(d * day + j), eid % 5, t, 1.0, "{}")
@@ -982,7 +982,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("pearsonMatrix (q264): perfect line, anti-line, nearest-rounded roots, clamp") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pear").toString
+    val dir = tempDir("graft_pear").toString
     var eid = 0L
     def evs(t: String, d: Long, n: Int) = (1 to n).map { j =>
       eid += 1; (eid, nanos(d * day + j), eid % 5, t, 1.0, "{}")
@@ -1009,7 +1009,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("markovStationary (q261): biased 2-state chain converges to 1/3-2/3; exact replay") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mkst").toString
+    val dir = tempDir("graft_mkst").toString
     // one user walking A B B A B B A B B A: transitions A->B x3,
     // B->B x3, B->A x3 -> P = [[0,1],[1/2,1/2]], stationary (1/3, 2/3)
     val seqTypes = Seq("alpha", "beta", "beta", "alpha", "beta", "beta",
@@ -1050,7 +1050,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("retentionTriangle (q259): staggered cohorts, dropout, exact bp") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ret").toString
+    val dir = tempDir("graft_ret").toString
     var eid = 0L
     def ev(u: Long, d: Long) = { eid += 1; (eid, nanos(d * day), u, "click", 1.0, "{}") }
     // weeks are epoch-day div 7; fixture days 0/7/14 hit weeks 0/1/2.
@@ -1074,7 +1074,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("cohortLtv (q195): month cohorts, exact per-cohort-user cents") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ltv").toString
+    val dir = tempDir("graft_ltv").toString
     def at(d: Long, i: Long) = nanos(d * day + i)
     Seq(
       (1L, at(4, 1), 1L, "view", 0.0, "{}"),        // u1 joins 1970-01
@@ -1098,7 +1098,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("activeStreaks (q196): gaps-and-islands runs, band shares") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_streak").toString
+    val dir = tempDir("graft_streak").toString
     var eid = 0L
     def on(u: Long, d: Long) = { eid += 1; (eid, nanos(d * day + u), u, "view", 0.0, "{}") }
     val rows = Seq(1L, 2L, 3L, 5L).map(on(1L, _)) ++      // best 3
@@ -1120,7 +1120,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("decayedBurstPanel (q203): dyadic baseline, burst/quiet verdicts, silence sentinel") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_burst").toString
+    val dir = tempDir("graft_burst").toString
     var eid = 0L
     def ev(ty: String, d: Long, n: Int) = (1 to n).map { i =>
       eid += 1; (eid, nanos(d * day + i), eid % 5, ty, 1.0, "{}")
@@ -1148,7 +1148,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("incrementalRefreshAudit (q204): merge == full recompute, exact touch bill") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivm").toString
+    val dir = tempDir("graft_ivm").toString
     // span days 1..10 → cutoff = day 4 (last 7 days are the delta)
     Seq(
       (1L, nanos(1 * day + 1), 1L, "purchase", 1.0, "{}"),
@@ -1174,7 +1174,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("comovementMatrix (q206): exact Spearman milli on ramps, ties, and gap days") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rho").toString
+    val dir = tempDir("graft_rho").toString
     var eid = 0L
     def ev(ty: String, d: Long, n: Int) = (1 to n).map { i =>
       eid += 1; (eid, nanos(d * day + i), eid % 5, ty, 1.0, "{}")
@@ -1201,7 +1201,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("valueMigration (q207): exact quartile elections per period, new/churned edges") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_migr").toString
+    val dir = tempDir("graft_migr").toString
     // span days 1..10 → cut = day 5 (period 1 is day <= 5)
     def p(id: Long, d: Long, u: Long, dollars: Double) =
       (id, nanos(d * day + id), u, "purchase", dollars, "{}")
@@ -1222,7 +1222,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("decileGains (q213): tie-stable decile election, exact lift/capture") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gains2").toString
+    val dir = tempDir("graft_gains2").toString
     var eid = 0L
     def ev(u: Long, t: String, n: Int) = (1 to n).map { _ =>
       eid += 1; (eid, nanos(eid), u, t, 1.0, "{}") }
@@ -1249,7 +1249,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("sessionPaths (q216): opening trigrams, late conversion still counts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_paths").toString
+    val dir = tempDir("graft_paths").toString
     var eid = 0L
     def ev(u: Long, t: String, sec: Long) = { eid += 1
       (eid, nanos(sec), u, t, 1.0, "{}") }
@@ -1276,7 +1276,7 @@ class EventAnalyticsSpec extends SparkSpec {
   }
 
   test("funnelStageDwell (q221): per-stage pass rates and exact median dwell") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dwell").toString
+    val dir = tempDir("graft_dwell").toString
     var eid = 0L
     def ev(u: Long, t: String, sec: Long) = { eid += 1
       (eid, nanos(sec), u, t, 1.0, "{}") }
@@ -1304,7 +1304,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("churnLabels (q227): pair grain, bands, horizon labeling, exclusions") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_churn").toString
+    val dir = tempDir("graft_churn").toString
     var eid = 0L
     def ev(u: Long, d: Long, t: String = "click") = {
       eid += 1; (eid, nanos(d * day + 1), u, t, 1.0, "{}")
@@ -1335,7 +1335,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("cusumShift (q228): hand-walked two-sided walk, zero-fill, flat type") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cusum").toString
+    val dir = tempDir("graft_cusum").toString
     var eid = 0L
     def evs(t: String, d: Long, n: Int) = (1 to n).map { i =>
       eid += 1; (eid, nanos(d * day + i), eid % 5, t, 1.0, "{}")
@@ -1373,7 +1373,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("coverageGaps (q230): runs, head gaps, and the shared global grid") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cover").toString
+    val dir = tempDir("graft_cover").toString
     var eid = 0L
     def ev(t: String, h: Long) = { eid += 1; (eid, nanos(h * 3600L + 1), eid % 5, t, 1.0, "{}") }
     val rows =
@@ -1395,7 +1395,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("peakConcurrency (q233): overlap peak, sentinel carry across midnight") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_peak").toString
+    val dir = tempDir("graft_peak").toString
     var eid = 0L
     def ev(u: Long, sec: Long) = { eid += 1; (eid, nanos(sec), u, "click", 1.0, "{}") }
     val rows = Seq(
@@ -1425,7 +1425,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("errorRecovery (q236): four outcomes, cutoffs, cascade beats quick") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_errrec").toString
+    val dir = tempDir("graft_errrec").toString
     var eid = 0L
     def ev(u: Long, sec: Long, t: String) = { eid += 1; (eid, nanos(sec), u, t, 1.0, "{}") }
     val rows = Seq(
@@ -1449,7 +1449,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("uShapedAttribution (q237): 40/20/40 split, cents-exact, direct and single-touch") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ushape").toString
+    val dir = tempDir("graft_ushape").toString
     var eid = 0L
     def ev(u: Long, sec: Long, t: String, v: Double = 0.0) = {
       eid += 1; (eid, nanos(sec), u, t, v, "{}")
@@ -1481,7 +1481,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("forecastBacktest (q241): weekly pattern wins, trend loses, short span drops") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fcast").toString
+    val dir = tempDir("graft_fcast").toString
     var eid = 0L
     def evs(t: String, d: Long, n: Int) = (1 to n).map { j =>
       eid += 1; (eid, nanos(d * day + j), eid % 5, t, 1.0, "{}")
@@ -1512,7 +1512,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("holtBacktest (q243): walk matches an independent floorDiv replay; SADs agree with q241") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_holt").toString
+    val dir = tempDir("graft_holt").toString
     var eid = 0L
     def evs(t: String, d: Long, n: Int) = (1 to n).map { j =>
       eid += 1; (eid, nanos(d * day + j), eid % 5, t, 1.0, "{}")
@@ -1578,7 +1578,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("abSignificance (q250): exact pooled z on a designed 10%-vs-30% split; floors match float z") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_absig").toString
+    val dir = tempDir("graft_absig").toString
     def h1(s: String): Long = {
       val md = java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes("UTF-8"))
@@ -1618,7 +1618,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("errorBudget (q248): burn arithmetic on a hand grid — alert conjunction, silent-day zero fill") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ebudget").toString
+    val dir = tempDir("graft_ebudget").toString
     var eid = 0L
     def evs(d: Long, errs: Int, oks: Int) =
       (1 to errs).map { j => eid += 1; (eid, nanos(d * day + j), eid % 3, "error", 1.0, "{}") } ++
@@ -1645,7 +1645,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("markovBacktest (q247): modal predictions, marginal baseline, strict helps election") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_markov").toString
+    val dir = tempDir("graft_markov").toString
     var eid = 0L
     def chain(u: Long, types: Seq[String]) = types.zipWithIndex.map {
       case (t, j) => eid += 1; (eid, nanos(u * 10000L + j * 10L), u, t, 1.0, "{}")
@@ -1671,7 +1671,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("hwBacktest (q251): walk matches an independent floorDiv replay; weekly shape elects the seasonal rungs") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_hw").toString
+    val dir = tempDir("graft_hw").toString
     var eid = 0L
     def evs(t: String, d: Long, n: Int) = (1 to n).map { j =>
       eid += 1; (eid, nanos(d * day + j), eid % 5, t, 1.0, "{}")
@@ -1749,7 +1749,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("theilSen (q252): exact pair-median slopes; an outage day cannot drag the long-series slope") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tsen").toString
+    val dir = tempDir("graft_tsen").toString
     var eid = 0L
     def evs(t: String, d: Long, n: Int) = (1 to n).map { j =>
       eid += 1; (eid, nanos(d * day + j), eid % 5, t, 1.0, "{}")
@@ -1784,7 +1784,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("botRegularity (q239): modal-gap bands, minimum-gap exclusion") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bot").toString
+    val dir = tempDir("graft_bot").toString
     var eid = 0L
     def user(u: Long, secs: Seq[Long]) = secs.map { s =>
       eid += 1; (eid, nanos(s), u, "click", 1.0, "{}")

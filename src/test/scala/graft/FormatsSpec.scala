@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.Formats
@@ -14,7 +12,7 @@ class FormatsSpec extends SparkSpec {
     val result = operators.Relational.pricingSummary(spark, sf0001)
     val schema = result.schema
     Formats.Supported.foreach { fmt =>
-      val dir = Files.createTempDirectory(s"graft_fmt_$fmt").toString + "/t"
+      val dir = tempDir(s"graft_fmt_$fmt").toString + "/t"
       Formats.write(result, dir, fmt)
       val back = Formats.read(spark, dir, fmt, Some(schema))
         .orderBy("l_returnflag", "l_linestatus")
@@ -28,7 +26,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("orc scan gets predicate pushdown + column pruning like parquet") {
-    val dir = Files.createTempDirectory("graft_orc").toString + "/li"
+    val dir = tempDir("graft_orc").toString + "/li"
     Formats.write(Tables.lineitem(spark, sf0001), dir, "orc")
     val plan = Formats.read(spark, dir, "orc")
       .filter(col("l_returnflag") === "A")
@@ -43,7 +41,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("partitioned write prunes at the file index (PartitionFilters, not row filters)") {
-    val dir = Files.createTempDirectory("graft_part").toString + "/docs"
+    val dir = tempDir("graft_part").toString + "/docs"
     Formats.writePartitioned(
       Tables.documents(spark, sf0001), dir, "parquet", Seq("lang"))
     // layout: one hive-style directory per lang value
@@ -86,7 +84,7 @@ class FormatsSpec extends SparkSpec {
 
   test("schema-evolution read unions evolved file schemas, null-filling old rows") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_evolve").toString
+    val dir = tempDir("graft_evolve").toString
     // producer v1: (doc_id, lang); later adds a quality column
     Seq((1L, "en"), (2L, "de")).toDF("doc_id", "lang")
       .write.mode("append").parquet(dir)

@@ -6,7 +6,7 @@ class GraphSpec extends SparkSpec {
   import spark.implicits._
 
   test("copurchaseDegrees (q224): bands, isolated parts, shares exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_deg").toString
+    val dir = tempDir("graft_deg").toString
     // o1 {1,2}, o2 {1,3}, o3 {4}: degrees 1→2, 2→1, 3→1, 4→0 (isolated)
     Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 3L), (3L, 4L))
       .toDF("l_orderkey", "l_partkey")
@@ -22,7 +22,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("pagerank (q225): three integer dyadic-damping steps, hand-walked") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr").toString
+    val dir = tempDir("graft_pr").toString
     // star: 1-2, 1-3 (from o1 {1,2}, o2 {1,3})
     // pr0 = 1000 each; hand walk (floor division at every step):
     // it1: 1 ← 1000+1000 → 1500; 2,3 ← 500 → 750
@@ -39,7 +39,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("componentProfile (q256): multi-component fixture — bands, isolated node, edge mass") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc").toString
+    val dir = tempDir("graft_cc").toString
     // components: {1,2,3} (triangle via o1, 3 edges), {4,5} (1 edge via
     // o2), {6} isolated (o3), {7,8,9,10} chain 7-8-9-10 (3 edges via
     // o4/o5/o6) -> bands: a_1 1 comp/1 node/0 edges;
@@ -59,7 +59,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("triangleProfile (q246): hand-walked orientation, one triangle, band coefficients exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tri").toString
+    val dir = tempDir("graft_tri").toString
     // o1 {5,6,7} (a triangle), o2 {5,8}, o3 {9}: degrees 5→3, 6→2,
     // 7→2, 8→1, 9→0. Orientation by (deg, id): 6→5, 7→5, 6→7, 8→5 —
     // the single triangle {5,6,7} materializes ONLY on base edge (6,7)
@@ -79,7 +79,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("triangleProfile: per-node credits sum to 3x the triangle count on a clique") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tri4").toString
+    val dir = tempDir("graft_tri4").toString
     // one order with 4 parts = K4: C(4,3) = 4 triangles, each node in
     // C(3,2) = 3 of them; all degrees 3 → one c_2_3 band row with
     // 12 wedges (4*C(3,2)), 12 triangle credits, cc = 10000
@@ -94,7 +94,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("pagerank: an isolated node settles at the 500-milli floor") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr2").toString
+    val dir = tempDir("graft_pr2").toString
     Seq((1L, 1L), (1L, 2L), (2L, 9L))
       .toDF("l_orderkey", "l_partkey")
       .write.parquet(s"$dir/lineitem.parquet")
@@ -106,7 +106,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("kCore (q277): triangle+pendant peels in two rounds, clique survives k=3") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kcore").toString
+    val dir = tempDir("graft_kcore").toString
     // o1 triangle {1,2,3}; o2 {1,4} and o3 {4,5} hang a 2-node tail off
     // node 1; o4 is a 4-clique {6,7,8,9}
     Seq((1L, 1L), (1L, 2L), (1L, 3L),

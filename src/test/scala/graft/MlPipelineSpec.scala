@@ -30,7 +30,7 @@ class MlPipelineSpec extends SparkSpec {
   test("pipeline model with SentimentStage saves and loads (MLWritable)") {
     import org.apache.spark.ml.PipelineModel
     val df = Seq("I love fast spark").toDF("text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ml").toString + "/m"
+    val dir = tempDir("graft_ml").toString + "/m"
     SentimentStage.fit(df).write.overwrite().save(dir)
     val loaded = PipelineModel.load(dir)
     assert(loaded.transform(df).select("sentiment.label").head.getString(0)

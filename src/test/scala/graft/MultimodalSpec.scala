@@ -106,7 +106,7 @@ class MultimodalSpec extends SparkSpec {
     // the duplicate path, pinned on a planted fixture: doc_ids 0/3/6 are
     // the same 'image' payload uploaded three times — a CAS stores one
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mediadup").toString
+    val dir = tempDir("graft_mediadup").toString
     Seq((0L, "same bytes again"), (3L, "same bytes again"),
       (6L, "same bytes again"), (9L, "different image bytes"),
       (1L, "an audio payload"), (2L, "a video payload"))

@@ -219,7 +219,7 @@ class PackingSpec extends SparkSpec {
   test("packing election (q198): fold pairing, odd middle, split pairs, corpus ordering") {
     import spark.implicits._
     def mk(lens: Seq[Int]): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_pack_elect").toString
+      val dir = tempDir("graft_pack_elect").toString
       lens.zipWithIndex
         .map { case (l, i) =>
           ((i + 1).toLong, Seq.fill(l)("w").mkString(" "), "en", "s", l.toLong) }

@@ -9,6 +9,8 @@ package graft
   *    crosses (query-point sets, centroid tables, single-row counts),
   *  - a Window over SinglePartition (a corpus-sized single-task sort),
   *  - any window with no partition spec, PlanCache seam subtrees included,
+  *  - a persisted RDD with no name: a lineage-free checkpoint instead of
+  *    a PlanCache seam,
   *  - a documents/lineitem parquet scan that reads every column for a
   *    narrower projection (pushdown/pruning silently lost).
   *
@@ -24,17 +26,27 @@ class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   private val allowedBnlj = PlanAudit.AllowedBnlj
 
   // every declared query planned ONCE, in a fresh session so that every
-  // PlanCache seam and localCheckpoint cut is planned inside the sweep
-  // (a cut hides its subtree from the plan tree, so the window walk
-  // cannot see it; WindowExec's warning, logged while it is planned,
-  // can). The sweeps below read the same executed plans.
+  // PlanCache seam is built inside the sweep. A seam is the only cut.
+  // The window walk descends into each seam a query reads (the cached
+  // plan under its InMemoryTableScan); a seam read by another seam's
+  // build shows there as a flat scan of its rows, but its own plan is
+  // built inside the sweep, where WindowExec's warning is captured. The
+  // sweeps below read the same executed plans. `unnamedPersisted` lists
+  // the RDDs the sweep persisted without a name: a seam's RDD carries
+  // its plan as its name, a lineage-free checkpoint's RDD has none.
   private lazy val sweep = spark.newSession()
-  private lazy val (planned, windowWarnings) = globalWindowWarnings {
-    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val df = fn(sweep, sf0001)
-      df.queryExecution.executedPlan
-      name -> df
+  private lazy val (planned, windowWarnings, unnamedPersisted) = {
+    val before = sweep.sparkContext.getPersistentRDDs.keySet
+    val (planned, warnings) = globalWindowWarnings {
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        val df = fn(sweep, sf0001)
+        df.queryExecution.executedPlan
+        name -> df
+      }
     }
+    val unnamed = sweep.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if !before(id) && rdd.name == null => rdd.toDebugString }
+    (planned, warnings, unnamed.toSeq)
   }
 
   override def afterAll(): Unit =
@@ -52,6 +64,8 @@ class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     }
     assert(windowWarnings.isEmpty,
       s"a window with no partition spec was planned: ${windowWarnings.mkString("; ")}")
+    assert(unnamedPersisted.isEmpty,
+      s"a lineage-free cut was built outside PlanCache: ${unnamedPersisted.mkString("\n")}")
   }
 
   test("the audit itself catches a planted cartesian and a global window") {

@@ -241,8 +241,7 @@ class PropertySpec extends SparkSpec {
     val massGen = Gen.chooseNum(1L, 1000L)
     val caseGen = Gen.chooseNum(1, 12).flatMap(n => Gen.listOfN(n, massGen))
     samples(caseGen, 5).zipWithIndex.foreach { case (masses, i) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_p_lpt_$i").toString
+      val dir = tempDir(s"graft_p_lpt_$i").toString
       masses.zipWithIndex.map { case (m, j) => (f"s$j%02d", m) }
         .toDF("source", "n_chars")
         .write.parquet(s"$dir/documents.parquet")
@@ -258,8 +257,7 @@ class PropertySpec extends SparkSpec {
     val votesGen = Gen.chooseNum(1L, 1000L)
     val caseGen = Gen.chooseNum(2, 8).flatMap(n => Gen.listOfN(n, votesGen))
     samples(caseGen, 5).zipWithIndex.foreach { case (votes, i) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_p_dh_$i").toString
+      val dir = tempDir(s"graft_p_dh_$i").toString
       votes.zipWithIndex.flatMap { case (v, j) =>
         (0L until v).map(k => (j * 1000000L + k, f"s$j%02d"))
       }.toDF("doc_id", "source").repartition(2)
@@ -279,8 +277,7 @@ class PropertySpec extends SparkSpec {
     val caseGen = Gen.listOfN(18, Gen.zip(Gen.chooseNum(1L, 3L), chanGen,
       Gen.chooseNum(1, 50)))
     samples(caseGen, 5).zipWithIndex.foreach { case (evs, i) =>
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_p_ush_$i").toString
+      val dir = tempDir(s"graft_p_ush_$i").toString
       val rows = evs.zipWithIndex.map { case ((u, t, v), j) =>
         (j.toLong + 1, (j.toLong + 1) * 1000000000L, u, t, v.toDouble, "{}")
       }

@@ -14,7 +14,7 @@ class RelationalOpsSpec extends SparkSpec {
     Timestamp.valueOf(LocalDateTime.of(2024, 1, 1, 0, 0).plusDays(d.toLong))
 
   test("rfmSegments (q176): histogram-elected quartile cutoffs, exact scores") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rfm").toString
+    val dir = tempDir("graft_rfm").toString
     // 8 customers on a fully controlled metric grid:
     //   recency days   0,1,2,3,4,5,6,7  → cutoffs 1/3/5 → scores 4,4,3,3,2,2,1,1
     //   frequency      1,1,2,2,3,3,4,4  → cutoffs 1/2/3 → scores 1,1,2,2,3,3,4,4
@@ -55,7 +55,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("rfmSegments: single-customer corpus lands every metric in the top cell") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rfm1").toString
+    val dir = tempDir("graft_rfm1").toString
     Seq((1L, 1L, "O", 42.0, day(5), "1-URGENT"))
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
@@ -73,7 +73,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("benfordAudit (q181): exact digit extraction on the cents grid") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_benford").toString
+    val dir = tempDir("graft_benford").toString
     // prices chosen so cents leading digits are controlled:
     // 1.00→100(1), 12.34→1234(1), 0.25→25(2), 2.00→200(2), 9.99→999(9)
     Seq((1L, 1L, "O", 1.00, day(1), "1-URGENT"),
@@ -106,7 +106,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("fdAudit (q183): holding and violated dependencies, exact fanout algebra") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fd").toString
+    val dir = tempDir("graft_fd").toString
     // customer: c_custkey -> c_nationkey HOLDS (keys 1,2,3 each one nation)
     Seq((1L, "a", 10, 1.0, "m"), (2L, "b", 10, 1.0, "m"),
       (3L, "c", 20, 1.0, "m"))
@@ -149,7 +149,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("basketPairs (q184): distinct baskets, pair supports, exact lift") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_basket").toString
+    val dir = tempDir("graft_basket").toString
     def li(ok: Long, pk: Long, ln: Long) =
       (ok, pk, 1L, ln, 1.0, 1.0, 0.0, 0.0, "N", "O", day(1))
     // order 1: {5,6,7}; order 2: {5,6}; order 3: {5,5,6} (dup line must
@@ -179,7 +179,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("supplierHhi (q187): exact cents grid, HHI, top share, effective count") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hhi").toString
+    val dir = tempDir("graft_hhi").toString
     def li(ok: Long, sk: Long, price: Double, disc: Double, ln: Long) =
       (ok, 1L, sk, ln, 1.0, price, disc, 0.0, "N", "O", day(1))
     // nation 10: supplier 1 → 100+200 = 300 cents; supplier 2 → 2·(1−.5) = 100
@@ -210,7 +210,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("repeatPurchaseGaps (q190): consecutive-order day gaps, band shares") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gaps").toString
+    val dir = tempDir("graft_gaps").toString
     def o(ok: Long, ck: Long, d: Int) =
       (ok, ck, "O", 1.0, day(d), "1-URGENT")
     // cust 1: days 1, 5, 40 → gaps 4 (a band), 35 (c); cust 2: 1, 200 → 199 (d)
@@ -229,7 +229,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("supplierSkyline (q208): exact dominance with the strict-in-one tie rule") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_skyline").toString
+    val dir = tempDir("graft_skyline").toString
     Seq((0L, "R1"), (1L, "R2")).toDF("r_regionkey", "r_name")
       .write.parquet(s"$dir/region.parquet")
     Seq((10L, "N1", 0L), (11L, "N2", 1L))
@@ -257,7 +257,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("basketTriples (q212): canonical triple fan-out, support and lift exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_triples").toString
+    val dir = tempDir("graft_triples").toString
     // order 1: {1,2,3} (with a duplicate part 1 line — sets dedup);
     // order 2: {1,2,3,4}; order 3: {1,2} (too small for a triple)
     Seq((1L, 1L), (1L, 1L), (1L, 2L), (1L, 3L),
@@ -278,7 +278,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("dependenceAudit (q214): exact FD scores 10000, independence 0") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dep").toString
+    val dir = tempDir("graft_dep").toString
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     // returnflag ↔ linestatus is a perfect two-way FD; quantity is
     // independent of returnflag (uniform 2×2); shipmonth is CONSTANT so
@@ -303,7 +303,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("shipLagSla (q223): exact medians and SLA shares per priority") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_sla").toString
+    val dir = tempDir("graft_sla").toString
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     Seq((1L, "P1", ts("1970-01-01 00:00:00")),
       (2L, "P1", ts("1970-01-01 00:00:00")),
@@ -326,7 +326,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("mannWhitney (q253): doubled midranks and z on a hand-ranked tie fixture") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mw").toString
+    val dir = tempDir("graft_mw").toString
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     Seq((1L, "1-URGENT", ts("1970-01-01 00:00:00")),
       (2L, "3-MEDIUM", ts("1970-01-01 00:00:00")))
@@ -355,7 +355,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("orderBacklog (q263): hand-walked end-of-day series and Little's-law wait") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_blog").toString
+    val dir = tempDir("graft_blog").toString
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     Seq((1L, ts("1970-01-01 00:00:00")), (2L, ts("1970-01-03 00:00:00")))
       .toDF("o_orderkey", "o_orderdate")
@@ -383,7 +383,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("benfordGof (q262): hand-walked chi2 over the dense digit grid; Nigrini MAD bands") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bgof").toString
+    val dir = tempDir("graft_bgof").toString
     // lineitem digits: one of each 1..9 plus an extra 1 (N=10);
     // per-digit contribs (milli) hand-floored: 338+328+49+0+54+163+
     // 304+465+641 = 2342; SAD of floored bp devs = 4040 -> MAD 448
@@ -408,7 +408,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("chiSquareIndependence (q258): hand-walked 2x2 table, exact V, both verdicts fire") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_chi").toString
+    val dir = tempDir("graft_chi").toString
     Seq((1L, "1-URGENT"), (2L, "5-LOW"))
       .toDF("o_orderkey", "o_orderpriority")
       .write.parquet(s"$dir/orders.parquet")
@@ -440,7 +440,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("ksTwoSample (q257): hand-walked CDF gap, argmax lag, squared threshold") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ks").toString
+    val dir = tempDir("graft_ks").toString
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     Seq((1L, "1-URGENT", ts("1970-01-01 00:00:00")),
       (2L, "3-MEDIUM", ts("1970-01-01 00:00:00")))
@@ -464,7 +464,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("kruskalWallis (q255): hand-ranked 3-group fixture; tie correction and df election") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kw").toString
+    val dir = tempDir("graft_kw").toString
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     Seq((1L, "1-URGENT", ts("1970-01-01 00:00:00")),
       (2L, "3-MEDIUM", ts("1970-01-01 00:00:00")),
@@ -503,7 +503,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("supplierLorenz (q254): hand-walked Gini and Lorenz points; equal split reads zero") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lorenz").toString
+    val dir = tempDir("graft_lorenz").toString
     // nation 0 revenues (cents): 100, 100, 200, 600 ->
     // S = 1*100 + 2*100 + 3*200 + 4*600 = 3300,
     // gini = (6600 - 5*1000)*1e4 / (4*1000) = 4000 bp;
@@ -526,7 +526,7 @@ class RelationalOpsSpec extends SparkSpec {
   }
 
   test("abcClasses (q226): permille-cell election, hand-walked 80/95 cut") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_abc").toString
+    val dir = tempDir("graft_abc").toString
     // part revenues (cents): 8000, 1500, 400, 100 → total 10000, max 8000
     // cells (rev·1000 div 8000): 1000, 187, 50, 12
     // cum_above: 0 → A; 8000 (=80% exactly, NOT <) → B; 9500, 9900 → C

@@ -50,7 +50,7 @@ class ScaleHarnessSpec extends SparkSpec {
       t <- (0 until nDistinct)
       c <- 0 until base(t)
     } yield (t.toLong * 1000000L + c, text(t))
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_scale_${nDistinct}_$total").toString
+    val dir = tempDir(s"graft_scale_${nDistinct}_$total").toString
     rows.toDF("doc_id", "text")
       .select(col("doc_id"), col("text"), lit("en").as("lang"),
         lit("gen").as("source"), length(col("text")).cast("long").as("n_chars"))
@@ -73,7 +73,7 @@ class ScaleHarnessSpec extends SparkSpec {
       }
       (id.toLong, v.toSeq, id % 4)
     }
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_scale_emb_$total").toString
+    val dir = tempDir(s"graft_scale_emb_$total").toString
     rows.toDF("vec_id", "embedding", "label")
       .select(col("vec_id"), col("embedding").cast("array<float>"), col("label").cast("int"))
       .repartition(4).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -346,8 +346,7 @@ class ScaleHarnessSpec extends SparkSpec {
         (0 until copies).map(c => (t * 1000L + c, base(t))) :+
           (t * 1000L + 999L, base(t) + " the")
       }
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_scale_pref_$copies").toString
+      val dir = tempDir(s"graft_scale_pref_$copies").toString
       rows.toDF("doc_id", "text")
         .select(col("doc_id"), col("text"), lit("en").as("lang"),
           lit("gen").as("source"), length(col("text")).cast("long").as("n_chars"))
@@ -432,8 +431,7 @@ class ScaleHarnessSpec extends SparkSpec {
         c <- 0 until poolCopies
       } yield (1000L + t * 10000L + c,
         (0 until 12).map(j => s"p${t}w$j").mkString(" "), "en", "gen")
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_ppx_scale_$poolCopies").toString
+      val dir = tempDir(s"graft_ppx_scale_$poolCopies").toString
       (ref ++ pool).toDF("doc_id", "text", "lang", "source")
         .withColumn("n_chars", length(col("text")).cast("long"))
         .repartition(4).write.mode("overwrite")
@@ -486,8 +484,7 @@ class ScaleHarnessSpec extends SparkSpec {
         src <- Seq("sa", "sb") if src == "sa" || t >= 10
       } yield (t.toLong * 100000L + c * 2L + (if (src == "sa") 0L else 1L),
         (0 until 12).map(j => s"t${t}w$j").mkString(" "), "en", src)
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_skov_scale_$copies").toString
+      val dir = tempDir(s"graft_skov_scale_$copies").toString
       rows.toDF("doc_id", "text", "lang", "source")
         .withColumn("n_chars", length(col("text")).cast("long"))
         .repartition(4).write.mode("overwrite")
@@ -508,8 +505,7 @@ class ScaleHarnessSpec extends SparkSpec {
         c <- 0 until copies
       } yield (v.toLong * 10000L + c, v.toLong * 1000000000L,
         v.toLong % 7, if (v % 2 == 0) "click" else "view", v * 0.37, "{}")
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_qsk_scale_$copies").toString
+      val dir = tempDir(s"graft_qsk_scale_$copies").toString
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .repartition(4).write.mode("overwrite").parquet(s"$dir/events.parquet")
       dir
@@ -543,8 +539,7 @@ class ScaleHarnessSpec extends SparkSpec {
       val rows = for { t <- 0 until 25; c <- 0 until copies } yield
         (t.toLong * 1000000L + c,
           (0 until (6 + t % 7)).map(j => s"u${t}w$j").mkString(" "))
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_statinv_$copies").toString
+      val dir = tempDir(s"graft_statinv_$copies").toString
       rows.toDF("doc_id", "text")
         .select(col("doc_id"), col("text"), lit("en").as("lang"),
           concat(lit("s"), (col("doc_id") / 1000000L).cast("long") % 5)
@@ -622,8 +617,7 @@ class ScaleHarnessSpec extends SparkSpec {
       eid += 1
       (eid, sec * 1000000000L, u * 100000L + c, ty, v, "{}")
     }
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft_evclone_$copies").toString
+    val dir = tempDir(s"graft_evclone_$copies").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .repartition(4).write.mode("overwrite").parquet(s"$dir/events.parquet")
     dir
@@ -692,8 +686,7 @@ class ScaleHarnessSpec extends SparkSpec {
         c <- 0 until copies
         (p, price) <- Seq((1L, 80.0), (2L, 15.0), (3L, 4.0), (4L, 1.0))
       } yield (p * 1000000L + c, price, 0.0)
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_abcclone_$copies").toString
+      val dir = tempDir(s"graft_abcclone_$copies").toString
       rows.toDF("l_partkey", "l_extendedprice", "l_discount")
         .repartition(4).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
       dir
@@ -718,8 +711,7 @@ class ScaleHarnessSpec extends SparkSpec {
         c <- 0 until copies
         (v, vec, l) <- Seq((1L, a, 0), (2L, a, 0), (3L, na, 1))
       } yield (v * 1000000L + c, vec, l)
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_pdfclone_$copies").toString
+      val dir = tempDir(s"graft_pdfclone_$copies").toString
       rows.toDF("vec_id", "embedding", "label")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
       dir
@@ -757,8 +749,7 @@ class ScaleHarnessSpec extends SparkSpec {
       c <- 0 until copies
       (d, text, src) <- Seq((1L, "x x x x z", "srcA"), (2L, "y y y y z", "srcB"))
     } yield (d * 1000000L + c, text, src)
-    val dir = java.nio.file.Files
-      .createTempDirectory(s"graft_dispclone_$copies").toString
+    val dir = tempDir(s"graft_dispclone_$copies").toString
     rows.toDF("doc_id", "text", "source")
       .repartition(4).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     dir
@@ -792,8 +783,7 @@ class ScaleHarnessSpec extends SparkSpec {
       val rows = for { c <- 0 until copies; v <- vals } yield {
         eid += 1; (eid, eid * 1000000000L, eid % 7, "t", v, "{}")
       }
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_valclone_$copies").toString
+      val dir = tempDir(s"graft_valclone_$copies").toString
       rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .repartition(4).write.mode("overwrite").parquet(s"$dir/events.parquet")
       dir
@@ -829,8 +819,7 @@ class ScaleHarnessSpec extends SparkSpec {
         (ok, (i + 1).toLong * 100000L + c, "O", price,
           day(100 - rDays(i) - (freq(i) - 1 - j)), "1-URGENT")
       }
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_rfmclone_$copies").toString
+      val dir = tempDir(s"graft_rfmclone_$copies").toString
       rows.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
           "o_orderdate", "o_orderpriority")
         .repartition(4).write.mode("overwrite").parquet(s"$dir/orders.parquet")
@@ -858,8 +847,7 @@ class ScaleHarnessSpec extends SparkSpec {
         (ok, parts) <- template
         (pk, ln) <- parts.zipWithIndex.map { case (p, l) => (p, (l + 1).toLong) }
       } yield li(ok * 100000L + c, pk, ln)
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_bktclone_$copies").toString
+      val dir = tempDir(s"graft_bktclone_$copies").toString
       rows.toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
           "l_quantity", "l_extendedprice", "l_discount", "l_tax",
           "l_returnflag", "l_linestatus", "l_shipdate")
@@ -902,8 +890,7 @@ class ScaleHarnessSpec extends SparkSpec {
         (ok, parts) <- template
         (pk, ln) <- parts.zipWithIndex.map { case (p, l) => (p, (l + 1).toLong) }
       } yield li(ok * 100000L + c, pk, ln)
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_graphclone_$copies").toString
+      val dir = tempDir(s"graft_graphclone_$copies").toString
       rows.toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
           "l_quantity", "l_extendedprice", "l_discount", "l_tax",
           "l_returnflag", "l_linestatus", "l_shipdate")
@@ -970,8 +957,7 @@ class ScaleHarnessSpec extends SparkSpec {
         s <- Seq("alpha", "beta")
         i <- 0 until 6
       } yield (s.hashCode.toLong * 1000L + i * 100L + c, text(s, i), "en", s)
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_hllclone_$copies").toString
+      val dir = tempDir(s"graft_hllclone_$copies").toString
       rows.toDF("doc_id", "text", "lang", "source")
         .withColumn("n_chars", length(col("text")).cast("long"))
         .repartition(4).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -1003,8 +989,7 @@ class ScaleHarnessSpec extends SparkSpec {
         (t, src) <- Seq(("a a a a a b b b c c d", "A"),
           ("a a a a e e e e c c c", "B"))
       } yield ((src.hashCode.toLong * 10000L + c, t, "en", src, 21L))
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_mgclone_$copies").toString
+      val dir = tempDir(s"graft_mgclone_$copies").toString
       rows.toDF("doc_id", "text", "lang", "source", "n_chars")
         .repartition(4).write.mode("overwrite").parquet(s"$dir/documents.parquet")
       dir
@@ -1036,8 +1021,7 @@ class ScaleHarnessSpec extends SparkSpec {
         (src, ncs) <- Seq("A" -> Seq(10L, 30L, 50L), "B" -> Seq(20L, 20L, 26L))
         (nc, i) <- ncs.zipWithIndex
       } yield (src.hashCode.toLong * 100000L + c * 10L + i, s"t", "en", src, nc)
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_neyclone_$copies").toString
+      val dir = tempDir(s"graft_neyclone_$copies").toString
       rows.toDF("doc_id", "text", "lang", "source", "n_chars")
         .repartition(4).write.mode("overwrite").parquet(s"$dir/documents.parquet")
       dir

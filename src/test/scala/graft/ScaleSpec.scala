@@ -125,14 +125,14 @@ class ScaleSpec extends SparkSpec {
     // Spark prunes fact partitions at RUNTIME from the dim's join keys
     // (a literal lang filter would be static pruning; DPP covers the
     // case where the pruning values are only known after the dim scan)
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString + "/docs"
+    val dir = tempDir("graft_dpp").toString + "/docs"
     graft.sources.Formats.writePartitioned(
       Tables.documents(spark, sf0001), dir, "parquet", Seq("lang"))
     val fact = graft.sources.Formats.read(spark, dir, "parquet")
     // the dim must be a real (file-backed) table: a literal Seq becomes a
     // LocalRelation whose filter Catalyst folds away eagerly, leaving no
     // selective predicate for the PartitionPruning rule to key on
-    val dimDir = java.nio.file.Files.createTempDirectory("graft_dpp_dim").toString
+    val dimDir = tempDir("graft_dpp_dim").toString
     Seq(("en", "English", true), ("de", "German", false),
       ("fr", "French", false), ("es", "Spanish", false), ("ja", "Japanese", false))
       .toDF("lang", "lang_name", "keep")
@@ -158,7 +158,7 @@ class ScaleSpec extends SparkSpec {
     // size, AQE must mark the sort-merge join skew-handled. The data is
     // written to parquet first — AQE sizes shuffle blocks from actual
     // map output, and a LocalRelation would be collapsed before the join
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew").toString
+    val dir = tempDir("graft_skew").toString
     val hot = spark.range(0, 40000).select(
       lit(0L).as("k"), col("id").as("payload"),
       concat(lit("x"), col("id")).as("pad"))
@@ -194,7 +194,7 @@ class ScaleSpec extends SparkSpec {
 
   test("bucketed tables join without an Exchange (co-located layout)") {
     // external tables in a temp dir (not the cwd warehouse), dropped below
-    val dir = java.nio.file.Files.createTempDirectory("graft_bkt").toString
+    val dir = tempDir("graft_bkt").toString
     Scale.writeBucketed(
       Tables.orders(spark, sf0001).select("o_orderkey", "o_totalprice"),
       "orders_bkt", "o_orderkey", 8, s"$dir/orders")
@@ -225,7 +225,7 @@ class ScaleSpec extends SparkSpec {
 
   test("bloomSizing (q205): distinct keys per column, closed-form bills at both targets") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom").toString
+    val dir = tempDir("graft_bloom").toString
     Seq((1L, 7L), (1L, 7L), (2L, 7L), (3L, 8L))
       .toDF("l_orderkey", "l_partkey")
       .write.parquet(s"$dir/lineitem.parquet")
@@ -260,7 +260,7 @@ class ScaleSpec extends SparkSpec {
     // chunk(zorder) = interleave(x div 8, y div 8) — the 8x8 super-grid.
     // Hand bill: point preds pk = 63(2j+1) div 16 hit one x-column;
     // week windows [lo, lo+6] on y hit 2 y-supercells except the last
-    val dir = java.nio.file.Files.createTempDirectory("graft_zorder").toString
+    val dir = tempDir("graft_zorder").toString
     val rows = for { x <- 0 to 63; y <- 0 to 63 } yield
       (x.toLong, java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(y.toLong)))
     rows.toDF("l_orderkey", "l_shipdate")
@@ -283,7 +283,7 @@ class ScaleSpec extends SparkSpec {
 
   test("encodingElection (q210): exact bit bills and winners on a hand fixture") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_enc").toString
+    val dir = tempDir("graft_enc").toString
     // (orderkey, linenumber, linestatus, partkey, quantity, tax, returnflag)
     Seq((1L, 1, "O", 1L, 1.0, 0.04, "A"), (1L, 2, "O", 2L, 1.0, 0.04, "A"),
       (1L, 3, "O", 3L, 2.0, 0.04, "B"), (1L, 4, "O", 4L, 2.0, 0.04, "B"),
@@ -321,7 +321,7 @@ class ScaleSpec extends SparkSpec {
 
   test("broadcastSizing (q215): exact per-table byte bills, threshold fan-out") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bsize").toString
+    val dir = tempDir("graft_bsize").toString
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     Seq((0L, "R")).toDF("r_regionkey", "r_name")
       .write.parquet(s"$dir/region.parquet")
@@ -366,7 +366,7 @@ class ScaleSpec extends SparkSpec {
 
   test("joinOrderElection (q217): exact intermediate bills from count histograms") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_jorder").toString
+    val dir = tempDir("graft_jorder").toString
     Seq((1L, "c1", 0L, 0.0), (2L, "c2", 0L, 0.0))
       .toDF("c_custkey", "c_name", "c_nationkey", "c_acctbal")
       .write.parquet(s"$dir/customer.parquet")
@@ -389,7 +389,7 @@ class ScaleSpec extends SparkSpec {
 
   test("compactionPlan (q218): exact partition byte bills and ceil file math") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val dir = tempDir("graft_compact").toString
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     // Jan 1970: 3 rows x 74 bytes (72 + 1 + 1); Feb: 1 row
     Seq(ts("1970-01-05 00:00:00"), ts("1970-01-15 00:00:00"),
@@ -416,7 +416,7 @@ class ScaleSpec extends SparkSpec {
 
   test("shufflePartitionAdvisor (q219): smallest balanced candidate elected") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_shadv").toString
+    val dir = tempDir("graft_shadv").toString
     (1L to 12L).map(k => Tuple1(k)).toDF("l_partkey")
       .write.parquet(s"$dir/lineitem.parquet")
     val out = graft.operators.Scale.shufflePartitionAdvisor(spark, dir)
@@ -434,7 +434,7 @@ class ScaleSpec extends SparkSpec {
 
   test("lptSchedule (q231): hand-walked greedy fold, loads and counts exact") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_lpt").toString
+    val dir = tempDir("graft_lpt").toString
     // masses desc 10,9,8,7,6,5 on 4 workers:
     // 10→w1, 9→w2, 8→w3, 7→w4, 6→w4 (least=7), 5→w3 (least=8)
     // → w1=10(1), w2=9(1), w3=13(2), w4=13(2); total 45
@@ -456,7 +456,7 @@ class ScaleSpec extends SparkSpec {
   test("cuboidElection (q238): hand-solved lattice — {s, rs, sm} is the unique optimum") {
     import spark.implicits._
     import java.sql.Timestamp
-    val dir = java.nio.file.Files.createTempDirectory("graft_cuboid").toString
+    val dir = tempDir("graft_cuboid").toString
     // cells (A,O,1), (A,O,2), (B,O,1) → cards: apex 1, r 2, s 1, rs 2,
     // m 2, rm 3, sm 2, rsm 3. Lower bound per query shape forces
     // 2, 3, 6 into the winner: cost 16 of the finest-only 24 → 3333 bp

@@ -9,7 +9,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("mutualNn (q232): reciprocal pairs, tie-break, bucket-isolated vector") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mnn").toString
+    val dir = tempDir("graft_mnn").toString
     // a = (1, 0.5, 0…): plane dots ∈ {±1.5, ±0.5}, never 0 — so −a lands
     // in the exact complementary bucket, guaranteed apart from a.
     val a = Array.tabulate(64)(i => if (i == 0) 1.0f else if (i == 1) 0.5f else 0.0f)
@@ -33,7 +33,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("probeDepthFrontier (q234): antipodal buckets keep every depth's profile; nesting algebra exact") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pdf").toString
+    val dir = tempDir("graft_pdf").toString
     // a and −a land in complementary 4-bit buckets (every plane sign
     // flips), so their prefixes differ at EVERY depth: all four depths
     // must show the identical 2-bucket profile — the prefix-nesting
@@ -250,7 +250,7 @@ class SimilaritySpec extends SparkSpec {
     // point, the cid tie-break funnels ALL vectors into cluster 0 — the
     // exact degenerate distribution the guard exists for
     val n = 64
-    val dir = java.nio.file.Files.createTempDirectory("graft_semdedup").toString
+    val dir = tempDir("graft_semdedup").toString
     val vec = Array.tabulate(64)(i => (0.1f + 0.01f * (i % 7)))
     import spark.implicits._
     (0L until n.toLong).map(i => (i, vec, 0))
@@ -355,7 +355,7 @@ class SimilaritySpec extends SparkSpec {
     }
     // perfectly separable fixture: two orthogonal label groups -> zero
     // misalignment, strictly positive margins
-    val dir = java.nio.file.Files.createTempDirectory("graft_purity").toString
+    val dir = tempDir("graft_purity").toString
     val a = Array.tabulate(64)(i => if (i < 32) 1.0f else 0.0f)
     val b = Array.tabulate(64)(i => if (i < 32) 0.0f else 1.0f)
     import spark.implicits._
@@ -388,7 +388,7 @@ class SimilaritySpec extends SparkSpec {
     }
     // fixture: label 0 identical across snapshots (cos 1, l2 0); label 1
     // rotated to an orthogonal direction (cos 0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val dir = tempDir("graft_drift").toString
     val ex = Array.tabulate(64)(i => if (i == 0) 1.0f else 0.0f)
     val ey = Array.tabulate(64)(i => if (i == 1) 1.0f else 0.0f)
     import spark.implicits._
@@ -433,7 +433,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("labelConfusability (q178): exact cosines, integer confusable rule") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_confus").toString
+    val dir = tempDir("graft_confus").toString
     import spark.implicits._
     def v(xs: (Int, Float)*): Array[Float] = {
       val a = Array.fill(64)(0.0f)
@@ -464,7 +464,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("tripletMargin (q194): partner election, micro-grid margins, sign-split mean") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_triplet").toString
+    val dir = tempDir("graft_triplet").toString
     import spark.implicits._
     def v(xs: (Int, Float)*): Array[Float] = {
       val a = Array.fill(64)(0.0f)

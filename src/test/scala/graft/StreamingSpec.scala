@@ -219,14 +219,15 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("parquet sink + checkpoint is exactly-once across restart (T1/T5/K1)") {
-    val src = Files.createTempDirectory("graft_stream_src").toString
-    val out = Files.createTempDirectory("graft_stream_out").toString
-    val chk = Files.createTempDirectory("graft_stream_chk").toString
+    val src = tempDir("graft_stream_src").toString
+    val out = tempDir("graft_stream_out").toString
+    val chk = tempDir("graft_stream_chk").toString
     tweets.toDF().write.mode("overwrite").json(src)
 
     def runOnce(): Unit = {
       val scored = Pipeline.scoreTweets(
-        Pipeline.readTweetStream(spark, src), "en", "spark")
+        Pipeline.readTweets(spark, Pipeline.SourceSpec("json", path = Some(src))),
+        "en", "spark")
       val q = Pipeline.writeParquet(scored, out, chk, Trigger.AvailableNow())
       q.awaitTermination()
     }
@@ -272,9 +273,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("as-of enrichment state survives checkpoint restart (J4+/T5)") {
-    val src = Files.createTempDirectory("graft_asof_src").toString
-    val out = Files.createTempDirectory("graft_asof_out").toString
-    val chk = Files.createTempDirectory("graft_asof_chk").toString
+    val src = tempDir("graft_asof_src").toString
+    val out = tempDir("graft_asof_out").toString
+    val chk = tempDir("graft_asof_chk").toString
     def run(): Unit = {
       val stream = spark.readStream
         .schema(Seq(AsofEvent(0L, 0L, "view", 0L, 0.0)).toDF().schema)
@@ -337,9 +338,9 @@ class StreamingSpec extends SparkSpec {
 
   test("packing state survives checkpoint restart (T4/T5/X6)") {
     import graft.streaming.PackDoc
-    val src = Files.createTempDirectory("graft_pack_src").toString
-    val out = Files.createTempDirectory("graft_pack_out").toString
-    val chk = Files.createTempDirectory("graft_pack_chk").toString
+    val src = tempDir("graft_pack_src").toString
+    val out = tempDir("graft_pack_out").toString
+    val chk = tempDir("graft_pack_chk").toString
     def run(): Unit = {
       val stream = spark.readStream
         .schema(Seq(PackDoc(0L, "en", 0L)).toDF().schema)
@@ -368,9 +369,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stateful dedup state survives checkpoint restart (T4/T5)") {
-    val src = Files.createTempDirectory("graft_dd_src").toString
-    val out = Files.createTempDirectory("graft_dd_out").toString
-    val chk = Files.createTempDirectory("graft_dd_chk").toString
+    val src = tempDir("graft_dd_src").toString
+    val out = tempDir("graft_dd_out").toString
+    val chk = tempDir("graft_dd_chk").toString
     val e1 = EventFixture(1, ts("2024-01-01 00:00:01"), 1L, "click", 1.0)
     val e2 = EventFixture(2, ts("2024-01-01 00:00:02"), 2L, "view", 1.0)
     val e3 = EventFixture(3, ts("2024-01-01 00:00:03"), 3L, "buy", 1.0)
@@ -480,7 +481,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("source seam: schema'd file and payload transports give identical results (S1)") {
-    val src = Files.createTempDirectory("graft_seam_src").toString
+    val src = tempDir("graft_seam_src").toString
     tweets.toDF().write.mode("overwrite").json(src)
 
     def runThrough(spec: Pipeline.SourceSpec, name: String): Seq[String] = {
@@ -644,7 +645,7 @@ class StreamingSpec extends SparkSpec {
     mem.addData(EventFixture(1L, ts("2024-01-01 00:00:01"), 1L, "click", 1.0))
     val seen = new java.util.concurrent.atomic.AtomicLong(-1)
     val q = Pipeline.writeForeachBatch(mem.toDF(),
-      Files.createTempDirectory("graft_fb_chk").toString,
+      tempDir("graft_fb_chk").toString,
       Trigger.AvailableNow()) { (batch, id) =>
       seen.set(batch.count() * 1000 + id)
     }
@@ -657,16 +658,17 @@ class StreamingSpec extends SparkSpec {
     // simulated streamer.py non-200: the first delivery attempt dies
     // mid-stream; the supervisor must back off, restart on the SAME
     // checkpoint, and the replayed batch must land every row exactly once.
-    val src = Files.createTempDirectory("graft_sup_src").toString
-    val out = Files.createTempDirectory("graft_sup_out").toString
-    val chk = Files.createTempDirectory("graft_sup_chk").toString
+    val src = tempDir("graft_sup_src").toString
+    val out = tempDir("graft_sup_out").toString
+    val chk = tempDir("graft_sup_chk").toString
     tweets.toDF().write.mode("overwrite").json(src)
 
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
     val delays = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val handle = Supervision.supervise(
       start = () => Pipeline.writeForeachBatch(
-        Pipeline.readTweetStream(spark, src), chk, Trigger.AvailableNow()) {
+        Pipeline.readTweets(spark, Pipeline.SourceSpec("json", path = Some(src))),
+        chk, Trigger.AvailableNow()) {
         (batch, id) =>
           if (failOnce.getAndSet(false))
             throw new RuntimeException("transport dropped (simulated non-200)")
@@ -686,10 +688,11 @@ class StreamingSpec extends SparkSpec {
       tweets.map(_.text).toSet)
 
     // exhausted retries surface the error instead of spinning forever
-    val alwaysChk = Files.createTempDirectory("graft_sup_chk2").toString
+    val alwaysChk = tempDir("graft_sup_chk2").toString
     val h2 = Supervision.supervise(
       start = () => Pipeline.writeForeachBatch(
-        Pipeline.readTweetStream(spark, src), alwaysChk, Trigger.AvailableNow()) {
+        Pipeline.readTweets(spark, Pipeline.SourceSpec("json", path = Some(src))),
+        alwaysChk, Trigger.AvailableNow()) {
         (_, _) => throw new RuntimeException("hard down")
       },
       policy = Supervision.Backoff(maxRestarts = 2, initialMs = 1, maxMs = 4),
@@ -708,9 +711,9 @@ class StreamingSpec extends SparkSpec {
     val bad0a = """{not json at all"""
     val bad0b = """<xml>wrong format</xml>"""
     val good1 = """{"text":"second batch tweet","lang":"en","created_at":"2024-01-01T10:01:05Z","entities":{"hashtags":[]}}"""
-    val dataPath = Files.createTempDirectory("graft_dl_data").toString
-    val quarPath = Files.createTempDirectory("graft_dl_quar").toString
-    val chk = Files.createTempDirectory("graft_dl_chk").toString
+    val dataPath = tempDir("graft_dl_data").toString
+    val quarPath = tempDir("graft_dl_quar").toString
+    val chk = tempDir("graft_dl_chk").toString
 
     val parsed = Pipeline.parseTweets(mem.toDF())
     val q = Pipeline.writeWithDeadLetter(parsed, dataPath, quarPath, chk,
@@ -840,9 +843,9 @@ class StreamingSpec extends SparkSpec {
 
   test("metrics listener observes a supervised kill-and-resume (restart count + last error)") {
     import graft.streaming.Supervision
-    val src = Files.createTempDirectory("graft_sml_src").toString
-    val out = Files.createTempDirectory("graft_sml_out").toString
-    val chk = Files.createTempDirectory("graft_sml_chk").toString
+    val src = tempDir("graft_sml_src").toString
+    val out = tempDir("graft_sml_out").toString
+    val chk = tempDir("graft_sml_chk").toString
     tweets.toDF().write.mode("overwrite").json(src)
 
     val metrics = new Supervision.MetricsListener(Some("graft_sml"))
@@ -850,7 +853,7 @@ class StreamingSpec extends SparkSpec {
     try {
       val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
       val handle = Supervision.supervise(
-        start = () => Pipeline.readTweetStream(spark, src)
+        start = () => Pipeline.readTweets(spark, Pipeline.SourceSpec("json", path = Some(src)))
           .writeStream.queryName("graft_sml")
           .option("checkpointLocation", chk)
           .trigger(Trigger.AvailableNow())
@@ -889,7 +892,7 @@ class StreamingSpec extends SparkSpec {
       .select("doc_id").collect().map(_.getLong(0)).toSet
     // stateless gate: a parquet-file stream through mixtureGate must admit
     // the identical doc_id set (the md5 coin has no per-batch state)
-    val streamDir = Files.createTempDirectory("graft_mix_stream")
+    val streamDir = tempDir("graft_mix_stream")
     Files.createSymbolicLink(streamDir.resolve("docs.parquet"),
       java.nio.file.Paths.get(s"$sf0001/documents.parquet").toAbsolutePath)
     val stream = spark.readStream.schema(docs.schema).parquet(streamDir.toString)
@@ -920,7 +923,7 @@ class StreamingSpec extends SparkSpec {
     val expected = scores.collect {
       case (id, lang, s) if thresholds.get(lang).exists(s >= _) => id
     }.toSet
-    val streamDir = Files.createTempDirectory("graft_dsir_stream")
+    val streamDir = tempDir("graft_dsir_stream")
     Files.createSymbolicLink(streamDir.resolve("docs.parquet"),
       java.nio.file.Paths.get(s"$sf0001/documents.parquet").toAbsolutePath)
     val stream = spark.readStream.schema(docs.schema).parquet(streamDir.toString)
@@ -965,7 +968,7 @@ class StreamingSpec extends SparkSpec {
     val expected = batch.collect {
       case (id, lang, q) if cutoffs.get(lang).exists(q >= _) => id
     }.toSet
-    val streamDir = Files.createTempDirectory("graft_cal_stream")
+    val streamDir = tempDir("graft_cal_stream")
     Files.createSymbolicLink(streamDir.resolve("docs.parquet"),
       java.nio.file.Paths.get(s"$sf0001/documents.parquet").toAbsolutePath)
     val stream = spark.readStream.schema(docs.schema).parquet(streamDir.toString)
@@ -1004,7 +1007,7 @@ class StreamingSpec extends SparkSpec {
         case r if snapshot.get(r.getString(1)).exists(_ >= floor) =>
           r.getLong(0)
       }.toSet
-    val streamDir = Files.createTempDirectory("graft_wilson_stream")
+    val streamDir = tempDir("graft_wilson_stream")
     Files.createSymbolicLink(streamDir.resolve("docs.parquet"),
       java.nio.file.Paths.get(s"$sf0001/documents.parquet").toAbsolutePath)
     val stream = spark.readStream.schema(docs.schema).parquet(streamDir.toString)
@@ -1029,7 +1032,7 @@ class StreamingSpec extends SparkSpec {
   test("span-scrub gate: snapshot coverage matches the batch q105 accounting row-exactly") {
     import spark.implicits._
     // batch corpus: docs 1-2 share the 5-gram "a b c d e"; doc 3 is clean
-    val dir = java.nio.file.Files.createTempDirectory("graft_spangate").toString
+    val dir = tempDir("graft_spangate").toString
     Seq((1L, "a b c d e f", "en", "src0"),
         (2L, "a b c d e z", "en", "src0"),
         (3L, "p q r s t u v", "en", "src0"))
@@ -1340,7 +1343,7 @@ class StreamingSpec extends SparkSpec {
     // 1.0) electing one duplicated 5-gram ("a b c d e")
     val good = "the distributed engine shuffles partitioned vectors efficiently today"
     val good2 = "another perfectly reasonable document about streaming watermarks arrives"
-    val snap = java.nio.file.Files.createTempDirectory("graft_scrub_intake").toString
+    val snap = tempDir("graft_scrub_intake").toString
     Seq((1L, "a b c d e f", "en", "src0"),
         (2L, "a b c d e z", "en", "src4"),
         (3L, good, "en", "src0"),
@@ -1387,7 +1390,7 @@ class StreamingSpec extends SparkSpec {
   test("curated intake: mixture gate + content dedup + quality gate compose in one job") {
     // snapshot with two equal-weight, equal-count sources: every rate is
     // exactly 1.0, so admission is decided purely by source membership
-    val snap = java.nio.file.Files.createTempDirectory("graft_curated").toString
+    val snap = tempDir("graft_curated").toString
     (Seq((1L, "base doc one", "en", "src0"), (2L, "base doc two", "en", "src4")))
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -1419,7 +1422,7 @@ class StreamingSpec extends SparkSpec {
   test("curated intake with the repetition gate drops internally-repetitive docs before dedup state") {
     // same two-source rate-1.0 snapshot as the basic composition test, so
     // admission is decided by the repetition gate specifically
-    val snap = java.nio.file.Files.createTempDirectory("graft_curated_rep").toString
+    val snap = tempDir("graft_curated_rep").toString
     (Seq((1L, "base doc one", "en", "src0"), (2L, "base doc two", "en", "src4")))
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -1460,7 +1463,7 @@ class StreamingSpec extends SparkSpec {
   test("curated intake with the pii gate drops identifier-carrying docs before dedup state") {
     // two-source rate-1.0 snapshot so admission is decided by the PII
     // gate specifically (the q157-composition test's device)
-    val snap = java.nio.file.Files.createTempDirectory("graft_curated_pii").toString
+    val snap = tempDir("graft_curated_pii").toString
     (Seq((1L, "base doc one", "en", "src0"), (2L, "base doc two", "en", "src4")))
       .toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -1530,7 +1533,7 @@ class StreamingSpec extends SparkSpec {
       .collect { case r if gatePass.contains(r.getAs[Long]("doc_id")) =>
         r.getAs[String]("_h") }
       .toSet
-    val streamDir = Files.createTempDirectory("graft_curated_full")
+    val streamDir = tempDir("graft_curated_full")
     Files.createSymbolicLink(streamDir.resolve("docs.parquet"),
       java.nio.file.Paths.get(s"$sf0001/documents.parquet").toAbsolutePath)
     val stream = spark.readStream
@@ -1605,7 +1608,7 @@ class StreamingSpec extends SparkSpec {
         cutoffs.get(r.getAs[String]("lang")).exists(r.getAs[Double]("q") >= _) =>
         r.getAs[String]("_h") }
       .toSet
-    val streamDir = Files.createTempDirectory("graft_curated_cal")
+    val streamDir = tempDir("graft_curated_cal")
     Files.createSymbolicLink(streamDir.resolve("docs.parquet"),
       java.nio.file.Paths.get(s"$sf0001/documents.parquet").toAbsolutePath)
     val stream = spark.readStream
@@ -1644,7 +1647,7 @@ class StreamingSpec extends SparkSpec {
     def ev(t: String, n: Int) = (1 to n).map { _ =>
       eid += 1; (eid, t0, eid % 3, t, 1.0, "{}")
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_volmon").toString
+    val dir = tempDir("graft_volmon").toString
     (ev("click", 12) ++ ev("view", 2) ++ ev("ghost", 3))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.parquet(s"$dir/events.parquet")
@@ -1678,7 +1681,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => r.getString(0) ->
         ((r.getAs[Long]("n"), r.getAs[Long]("toks"), r.getAs[Long]("qmm")))).toMap
     val nDistinct = docs.select(countDistinct(col("text"))).first().getLong(0)
-    val streamDir = Files.createTempDirectory("graft_ds_stream")
+    val streamDir = tempDir("graft_ds_stream")
     Files.createSymbolicLink(streamDir.resolve("docs.parquet"),
       java.nio.file.Paths.get(s"$sf0001/documents.parquet").toAbsolutePath)
     val stream = spark.readStream.schema(docs.schema).parquet(streamDir.toString)
@@ -2034,7 +2037,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{ConcurrencyOut, MinuteCell}
     // the q233 batch fixture, replayed: u1 [m10,m20], u2 [m15], u3 [m5]
     // + [m90] (day 0), u4 day-1 m30, u5 spanning midnight day2->day3
-    val dir = Files.createTempDirectory("graft_concmon").toString
+    val dir = tempDir("graft_concmon").toString
     var eid = 0L
     def ev(u: Long, sec: Long) = { eid += 1; (eid, sec * 1000000000L, u, "click", 1.0, "{}") }
     Seq(ev(1L, 600L), ev(1L, 1200L), ev(2L, 900L),
@@ -2095,7 +2098,7 @@ class StreamingSpec extends SparkSpec {
       "spiky" -> ((0 to 6).map(d => d.toLong -> 2L).toMap +
         (7L -> 20L) + (9L -> 2L)),
       "rise" -> Map(9L -> 5L))
-    val dir = Files.createTempDirectory("graft_burstmon").toString
+    val dir = tempDir("graft_burstmon").toString
     var eid = 0L
     counts.toSeq.flatMap { case (t, byDay) =>
       byDay.toSeq.flatMap { case (d, c) =>
@@ -2154,7 +2157,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.{BudgetCell, BurnOut}
     // the q248 spec fixture replayed: day0 1/4 errors, day1 2/2 (the
     // fast alert), day2 silent, day3 0/5 clean
-    val dir = Files.createTempDirectory("graft_burnmon").toString
+    val dir = tempDir("graft_burnmon").toString
     var eid = 0L
     def evs(d: Long, errs: Int, oks: Int) =
       (1 to errs).map { j => eid += 1; (eid, (d * 86400L + j) * 1000000000L, eid % 3, "error", 1.0, "{}") } ++
@@ -2281,7 +2284,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("V2 replay source: file-replay parity through the full pipeline (S1)") {
-    val src = Files.createTempDirectory("graft_v2_parity").toString
+    val src = tempDir("graft_v2_parity").toString
     writeReplayFiles(src)
 
     def runThrough(spec: Pipeline.SourceSpec, name: String): Seq[String] = {
@@ -2302,7 +2305,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("V2 replay source: maxFilesPerTrigger paces admission one file per batch (S1/T1)") {
-    val src = Files.createTempDirectory("graft_v2_pace").toString
+    val src = tempDir("graft_v2_pace").toString
     writeReplayFiles(src)
     val spec = Pipeline.SourceSpec("tweet-replay", path = Some(src),
       options = Map("maxFilesPerTrigger" -> "1"))
@@ -2321,9 +2324,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("V2 replay source: restart resumes from the checkpointed offset (S1/T5)") {
-    val src = Files.createTempDirectory("graft_v2_restart").toString
-    val out = Files.createTempDirectory("graft_v2_restart_out").toString
-    val chk = Files.createTempDirectory("graft_v2_restart_chk").toString
+    val src = tempDir("graft_v2_restart").toString
+    val out = tempDir("graft_v2_restart_out").toString
+    val chk = tempDir("graft_v2_restart_chk").toString
     writeReplayFiles(src)
 
     def runOnce(extra: Map[String, String]): Long = {
@@ -2352,9 +2355,9 @@ class StreamingSpec extends SparkSpec {
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.execution.streaming.checkpointing.{
       CheckpointFileManager, FileContextBasedCheckpointFileManager}
-    val src = Files.createTempDirectory("graft_cfm_resume").toString
-    val out = Files.createTempDirectory("graft_cfm_resume_out").toString
-    val chk = Files.createTempDirectory("graft_cfm_resume_chk").toString
+    val src = tempDir("graft_cfm_resume").toString
+    val out = tempDir("graft_cfm_resume_out").toString
+    val chk = tempDir("graft_cfm_resume_chk").toString
     writeReplayFiles(src)
     val stock = spark.newSession()
     stock.conf.set(graft.streaming.LocalCheckpointFileManager.ConfKey,

@@ -50,7 +50,7 @@ class TablesSpec extends SparkSpec {
 
   test("legacy nanos-as-long events encoding still converts (the old driver layout)") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_ns_events").toString
+    val dir = tempDir("graft_ns_events").toString
     // simulate the pre-rotation layout: ts physically int64 nanoseconds
     Tables.events(spark, sf0001)
       .selectExpr("event_id", "unix_micros(ts) * 1000L AS ts", "user_id",
@@ -65,7 +65,7 @@ class TablesSpec extends SparkSpec {
 
   test("events loader leaves caller-session conf untouched for µs encodings") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_us_events").toString
+    val dir = tempDir("graft_us_events").toString
     // a µs TIMESTAMP events layout (what Spark itself writes)
     Tables.events(spark, sf0001)
       .selectExpr("event_id", "ts", "user_id", "event_type", "value", "props")

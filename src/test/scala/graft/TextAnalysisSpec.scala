@@ -66,7 +66,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("repetition scorer: hand-computed fractions and Gopher flags") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rep").toString
+    val dir = tempDir("graft_rep").toString
     Seq(
       (1L, "spam spam spam spam", "en", "t", 19L),           // all one token
       (2L, "alpha beta gamma delta", "en", "t", 22L),        // short → bigram-flagged
@@ -155,7 +155,7 @@ class TextAnalysisSpec extends SparkSpec {
 
   /** Tiny documents-table fixture on disk, matching the driver schema. */
   private def docsFixture(rows: Seq[(Long, String, String, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_textspec").toString
+    val dir = tempDir("graft_textspec").toString
     rows.toDF("doc_id", "text", "lang", "source")
       .withColumn("n_chars", length(col("text")).cast("long"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -555,7 +555,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("repetition profile (q157): planted spam lands in the high band; shares match a driver recompute") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rep157").toString
+    val dir = tempDir("graft_rep157").toString
     val spam = Seq.fill(10)("buy cheap pills now").mkString(" ")
     val clean = "every word in this sentence appears exactly once keeping all trigram shares minimal"
     val docs = Seq(
@@ -599,7 +599,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("blocklist density (q160): hand-counted hits; inert terms contribute nothing; clean source at zero") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_block").toString
+    val dir = tempDir("graft_block").toString
     Seq(
       // 2 hits ('slow' ×1, 'dup' ×1) in 6 tokens; flagged
       (1L, "the slow join caused dup rows", "dirty"),
@@ -679,7 +679,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("sketch overlap (q158): sub-k universes degenerate to exact; disjoint sources clamp at zero") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_skov").toString
+    val dir = tempDir("graft_skov").toString
     Seq(
       (1L, "alpha beta gamma delta", "tiny_a"),
       (2L, "alpha beta gamma epsilon", "tiny_b"),
@@ -759,7 +759,7 @@ class TextAnalysisSpec extends SparkSpec {
     }
     // planted drift: a snippet farm of 5-token docs against 50-token
     // bodies must carry a near-maximal KS at the short length
-    val dir = java.nio.file.Files.createTempDirectory("graft_ks").toString
+    val dir = tempDir("graft_ks").toString
     val short = (1L to 4L).map(i => (i, Seq.fill(5)(s"s$i").mkString(" "), "snippets"))
     val long = (10L to 21L).map(i => (i, (0 until 50).map(j => s"w${i}x$j").mkString(" "), "bodies"))
     (short ++ long).toDF("doc_id", "text", "source")
@@ -799,7 +799,7 @@ class TextAnalysisSpec extends SparkSpec {
       assert(r.getAs[Long]("gini_bp") >= 0L && r.getAs[Long]("gini_bp") < 10000L)
     }
     // analytic anchors: equal masses → 0; one giant among dust → near max
-    val dir = java.nio.file.Files.createTempDirectory("graft_gini").toString
+    val dir = tempDir("graft_gini").toString
     val eq = (1L to 5L).map(i => (i, "a b c d", "en"))
     val skew = (10L to 18L).map(i => (i, "x", "xx")) :+
       (19L, Seq.fill(991)("y").mkString(" "), "xx")
@@ -816,7 +816,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("mattr (q170): window fixes TTR's length bias; short docs excluded; values exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mattr").toString
+    val dir = tempDir("graft_mattr").toString
     // base: 30 distinct tokens; doubled: the same text twice — identical
     // local diversity, half the plain TTR
     val base = (0 until 30).map(i => s"v$i").mkString(" ")
@@ -850,7 +850,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("vocab diff (q171): churn classes partition the vocabulary; planted mint and retire are exact") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vdiff").toString
+    val dir = tempDir("graft_vdiff").toString
     // old (even ids): shared + retiring terms; new (odd ids): shared +
     // minted terms — hand-computable churn
     Seq(
@@ -885,7 +885,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("vocab entropy (q163): milli-bit H matches a driver recomputation; skew collapses it; 1-type floor") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_entropy").toString
+    val dir = tempDir("graft_entropy").toString
     Seq(
       // flat: 6 types, each once → H = log2(6) exactly
       (1L, "alpha beta gamma delta epsilon zeta", "en", "flat"),
@@ -922,7 +922,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("domain KL (q151): milli-bit divergences match a driver recomputation; disjoint domains diverge most") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kl").toString
+    val dir = tempDir("graft_kl").toString
     // A and B share a vocabulary at slightly different rates; C is a
     // disjoint domain — KL(A||C) must dwarf KL(A||B)
     Seq(
@@ -1005,7 +1005,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("rule filter audit (q142): each published rule fires on its fixture doc and only it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rules").toString
+    val dir = tempDir("graft_rules").toString
     // each fixture doc trips exactly ONE rule (the others carry >= 2
     // stopwords, 5+ tokens, mean word length in [3,10], terminal
     // punctuation, no braces) so every counter is pinned independently
@@ -1043,7 +1043,7 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("perplexity filter (q140): milli-bit LM costs match a driver-side reimplementation") {
     // reference slice: LM(en) = {a: 2, b: 1}, T=3, V=2 -> T+V = 5
-    val dir = java.nio.file.Files.createTempDirectory("graft_ppx").toString
+    val dir = tempDir("graft_ppx").toString
     Seq((1L, "a a b", "en", "src0"),
         (2L, "a a a a", "en", "srcX"), // most reference-like
         (3L, "a b", "en", "srcX"),
@@ -1181,7 +1181,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("HLL sketch (q242): tiny scopes take the linear-counting branch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_hll").toString
+    val dir = tempDir("graft_hll").toString
     Seq((1L, "x y z", "en", "a", 5L), (2L, "p q", "en", "b", 3L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -1202,7 +1202,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("MG summary (q244): hand-walked merge at k=2; undercount never exceeds n/(k+1)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_mg").toString
+    val dir = tempDir("graft_mg").toString
     // source A counts: a5 b3 c2 d1 -> t_A = 2 (3rd largest), summary a3 b1
     // source B counts: a4 e4 c3   -> t_B = 3, summary a1 e1
     // merged pre: a4 b1 e1 -> t_m = 1 (3rd of a4, b1, e1), summary a3
@@ -1249,7 +1249,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("RAKE keyphrases (q249): hand-walked degree/frequency scores, stopword segmentation, tie order") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rake").toString
+    val dir = tempDir("graft_rake").toString
     // doc1 segments: "fast hash join" | "hash join order"
     // doc2 segments: "hash join" | "data table"
     // word scores (deg*1000 div freq): fast 3000, order 3000,
@@ -1305,7 +1305,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("novelty election (q155): greedy credit follows token-mass rank; a redundant source mints zero") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_novelty").toString
+    val dir = tempDir("graft_novelty").toString
     // srcBig (10 tokens, vocab a b c d) outranks srcDup (5 tokens,
     // vocab ⊂ srcBig) outranks srcNiche (3 tokens, 2 novel types x y)
     Seq(
@@ -1327,7 +1327,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("vocab richness (q173): Chao1 and Good-Turing exact on hand counts, F2=0 guard") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_rich").toString
+    val dir = tempDir("graft_rich").toString
     Seq(
       // lang aa: tokens p q r s s → N=5, V=4, F1=3 (p,q,r), F2=1 (s)
       //   chao1 = 4 + 3·2 div (2·2) = 5; unseen_bp = 3·10000 div 5 = 6000
@@ -1353,7 +1353,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("winnowing (q174): coverage guarantee, rightmost-min determinism, dup docs share fingerprints") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_winnow").toString
+    val dir = tempDir("graft_winnow").toString
     val long = (1 to 30).map(i => s"tok${i % 11}").mkString(" ") // repeats → hash ties
     Seq(
       (1L, long, "en", "srcA", 120L),
@@ -1395,7 +1395,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("readability (q177): vowel-group syllables, complex share, exact FRE/Fog") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_read").toString
+    val dir = tempDir("graft_read").toString
     Seq(
       // s1: identified = i|e|i|ie → 4 syl (complex), banana = 3 (complex)
       (1L, "the cat identified a banana", "en", "s1", 27L),
@@ -1428,7 +1428,7 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("bpeFirstMerges (q202): adjacent char pairs, per-lang ranks, pair tie-break") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe").toString
+    val dir = tempDir("graft_bpe").toString
     Seq(
       (1L, "abab cd", "en", "t", 7L),  // abab → ab,ba,ab; cd → cd
       (2L, "ab x", "en", "t", 4L),     // ab → ab; 'x' has no pair
@@ -1448,7 +1448,7 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("bpeMergeLadder (q268): hand-walked greedy merges, non-overlap, ties") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpeladder").toString
+    val dir = tempDir("graft_bpeladder").toString
     // en corpus (word types × freq): "aaaa"×1, "abab"×2, "ab"×1.
     // step 1 pairs: aa×3 (aaaa), ab×5 (abab×2 ×2, ab×1), ba×2 → merge (a,b).
     //   aaaa → a a a a (untouched); abab → ab ab; ab → ab
@@ -1480,7 +1480,7 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("kappaAgreement (q276): hand-built 2x2, negative kappa, exact cells") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_kappa").toString
+    val dir = tempDir("graft_kappa").toString
     // four rater archetypes, far from every verdict boundary:
     val w50 = (1 to 50).map(i => f"w$i%02daaa").mkString(" ")
     val tA = s"$w50 the and good."       // clean + quality ≥ .75 → a
@@ -1508,7 +1508,7 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("termPositionBias (q220): exact relative positions and front shares") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_posbias").toString
+    val dir = tempDir("graft_posbias").toString
     // doc1 "a b a": rels 0, 333, 666; doc2 "b a": rels 0, 500
     Seq((1L, "a b a", "en", "t", 5L), (2L, "b a", "en", "t", 3L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -1526,7 +1526,7 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("termDispersion (q235): source-local terms score TVD/2, shared terms 0") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_disp").toString
+    val dir = tempDir("graft_disp").toString
     // srcA: "x x x x z" (5 tokens), srcB: "y y y y z" (5) — masses 50/50.
     // x lives only in A: |10000−5000| + |0−5000| = 10000 → dp 5000;
     // z is 1+1: shares 5000/5000 → dp 0
