@@ -23,10 +23,12 @@ import org.apache.spark.storage.StorageLevel
   *    and no optimizer rule moves an expression across it (a kernel
   *    below the cut runs once, not once per reference above it). Unlike
   *    a lineage-free checkpoint, a lost block is recomputed from the
-  *    cached plan. Released by `unpersist(blocking = false)`.
+  *    cached plan. Released by `unpersist(blocking = false)` when the
+  *    last entry holding its CacheManager slot goes.
   *  - '''Resolved relation''' ([[relation]], behind `Tables.table`): the
-  *    lazy parquet DataFrame, so a session reads each footer and listing
-  *    once; every action still scans parquet. Released by dropping the
+  *    lazy parquet DataFrame, so a session lists each table and builds
+  *    its relation once (the schema itself is pinned per JVM by
+  *    [[Tables]]); every action still scans parquet. Released by dropping the
   *    reference only: an `unpersist` would drop any user-cached plan
   *    equal to it.
   *  - '''Derived layout''' ([[layout]]): a re-laid-out copy of an input
@@ -58,39 +60,74 @@ object PlanCache {
     * cached rows ([[bridge.flattenSeams]]), so a loop's plan stays one
     * round deep. A `build` that returns a seam as it is (the last round
     * of a loop) is keyed as it is: the entry that made it owns its
-    * release. */
+    * release.
+    *
+    * Equal plans share one slot of Spark's CacheManager, across sessions
+    * too (a second persist of an equal plan is a no-op). Each entry holds
+    * the slot it reads, and its release unpersists only when the last
+    * holder goes; otherwise one session's [[clear]] would drop another's
+    * cache, and that session's leaf would refill its buffers outside the
+    * CacheManager. */
   def cached(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
-    entries.getOrElseUpdate((sid(spark), key), {
+    entry(spark, key) {
       val built = build
       if (bridge.isCachedLeaf(built)) Entry(built, () => ())
       else {
-        val df = bridge.flattenSeams(built).persist(StorageLevel.MEMORY_AND_DISK)
-        Entry(bridge.cachedLeaf(df), () => df.unpersist(blocking = false))
+        val flat = bridge.flattenSeams(built)
+        holders.synchronized {
+          val df = flat.persist(StorageLevel.MEMORY_AND_DISK)
+          val leaf = bridge.cachedLeaf(df)
+          val slot = bridge.cacheSlot(leaf)
+          slot.foreach(s => holders.put(s, holders.getOrDefault(s, 0) + 1))
+          Entry(leaf, () => holders.synchronized {
+            val left = slot.fold(0)(holders.get(_) - 1)
+            if (left > 0) slot.foreach(holders.put(_, left))
+            else { slot.foreach(holders.remove); df.unpersist(blocking = false) }
+          })
+        }
       }
-    }).value.asInstanceOf[DataFrame]
+    }.asInstanceOf[DataFrame]
+
+  /** Entries holding each CacheManager slot (by identity); guards every
+    * persist and unpersist of a seam. */
+  private val holders = new java.util.IdentityHashMap[AnyRef, Int]
+
+  /** Entries holding the CacheManager slot `seam` reads (PlanCacheSpec). */
+  private[graft] def holdersOf(seam: DataFrame): Int =
+    holders.synchronized(bridge.cacheSlot(seam).fold(0)(holders.getOrDefault(_, 0)))
 
   /** The resolved relation for `key` in this session, resolving it on
     * first use. A hit is one lock-free map lookup. */
   private[graft] def relation(spark: SparkSession, key: String)(resolve: => DataFrame): DataFrame =
-    entries.getOrElseUpdate((sid(spark), key), Entry(resolve, () => ())).value.asInstanceOf[DataFrame]
+    entry(spark, key)(Entry(resolve, () => ())).asInstanceOf[DataFrame]
 
   /** The directory of derived layout `key` in this session; on first use
     * `write` fills a fresh temp directory. The release runs `drop` (for
     * catalog entries pointing into the directory), then deletes it; it
-    * runs on [[clear]], when `write` fails, and for the loser of two
-    * concurrent builds of one key. */
+    * runs on [[clear]] and when `write` fails. */
   def layout(spark: SparkSession, key: String)(write: String => Unit)(
       drop: String => Unit = _ => ()): String =
-    entries.get((sid(spark), key)).getOrElse {
+    entry(spark, key) {
       val dir = Files.createTempDirectory("graft_layout_")
       val mine = Entry(dir.toString, () => { drop(dir.toString); deleteTree(dir) })
       try write(dir.toString)
       catch { case e: Throwable => mine.release(); throw e }
-      entries.putIfAbsent((sid(spark), key), mine) match {
+      mine
+    }.asInstanceOf[String]
+
+  /** The value of entry `key` in this session, made by `make` on first
+    * use. Of two concurrent makes of one key, the loser's entry is
+    * released. */
+  private def entry(spark: SparkSession, key: String)(make: => Entry): AnyRef = {
+    val k = (sid(spark), key)
+    entries.get(k).getOrElse {
+      val mine = make
+      entries.putIfAbsent(k, mine) match {
         case Some(theirs) => mine.release(); theirs
         case None => mine
       }
-    }.value.asInstanceOf[String]
+    }.value
+  }
 
   /** Delete `dir` and everything under it, if it exists. */
   private[graft] def deleteTree(dir: Path): Unit = if (Files.exists(dir)) {

@@ -175,7 +175,7 @@ object Dedup {
     * Lifecycle is explicit via [[graft.PlanCache]]: one persist per
     * (session, dir), repeated calls get the same reference (no re-cache
     * warnings), and PlanCache.clear releases it. */
-  private def signatures(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def signatures(spark: SparkSession, dir: String): DataFrame =
     graft.PlanCache.cached(spark, s"dedup.minhashSig:$dir") {
       Tables.documents(spark, dir)
         .select(col("doc_id"),

@@ -90,6 +90,14 @@ object bridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan
       .isInstanceOf[InMemoryRelation]
 
+  /** The CacheManager slot a seam leaf reads: its `CachedRDDBuilder`,
+    * which every leaf over an equal persisted plan shares. */
+  def cacheSlot(df: org.apache.spark.sql.DataFrame): Option[AnyRef] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan match {
+      case r: InMemoryRelation => Some(r.cacheBuilder)
+      case _ => None
+    }
+
   /** Stable unique id for a session instance (`sessionUUID` is
     * private[sql]) — unlike identityHashCode, never collides between two
     * live sessions. */
@@ -100,6 +108,10 @@ object bridge {
     * confs), what Spark's own file sources list and read with. */
   def newHadoopConf(spark: org.apache.spark.sql.SparkSession): org.apache.hadoop.conf.Configuration =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf()
+
+  /** The session's SQL conf (`sessionState` is private[sql]). */
+  def sqlConf(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.conf
 
   /** Runtime function registration on an existing session (the
     * spark.sql.extensions config path needs the session to be built with

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.graft.{CacheSlots, bridge}
 
 import graft.operators.{Dedup, EventAnalytics, TextAnalysis}
 
@@ -44,6 +44,46 @@ class PlanCacheSpec extends SparkSpec {
       val fresh = PlanCache.cached(s1, "sig")(s1.range(2).toDF("n"))
       assert(!(fresh eq got1) && rows(fresh) == rows(s1.range(2).toDF("n")),
         "clear(s1) must actually drop s1's entry")
+    } finally {
+      PlanCache.clear(s1)
+      PlanCache.clear(s2)
+    }
+  }
+
+  test("equal seams of two sessions share one CacheManager slot until the last holder goes") {
+    // q20's signature seam is an equal plan in every session over the
+    // same data (the seams above it read it as a per-session RDD scan), so
+    // both sessions' entries read one CacheManager slot; clearing one
+    // session must leave the other's slot (and its cached rows) in place.
+    // The data is a private copy, so no other session holds these slots.
+    val dir = tempDir("graft_slot").toString
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf0001, "documents.parquet"),
+      java.nio.file.Paths.get(dir, "documents.parquet"))
+    val s1 = spark.newSession()
+    val s2 = spark.newSession()
+    val sc = spark.sparkContext
+    def q20(s: SparkSession) = rows(SparkEntry.queries("q20_minhash_neardup")(s, dir)).sorted
+    try {
+      val want = q20(s1)
+      assert(q20(s2) == want && want.nonEmpty)
+      val seam = Dedup.signatures(s2, dir)
+      assert(Dedup.signatures(s1, dir) ne seam, "each session holds its own entry")
+      assert(CacheSlots.registered(seam) && PlanCache.holdersOf(seam) == 2)
+      val seamRows = rows(seam).sorted
+      val rdd = CacheSlots.rddId(seam)
+      assert(sc.getPersistentRDDs.contains(rdd))
+
+      PlanCache.clear(s1)
+      assert(CacheSlots.registered(seam), "clear(s1) dropped the slot s2 still reads")
+      assert(PlanCache.holdersOf(seam) == 1)
+      assert(rows(seam).sorted == seamRows && q20(s2) == want)
+      assert(CacheSlots.rddId(seam) == rdd && sc.getPersistentRDDs.contains(rdd),
+        "s2's seam refilled its rows outside the CacheManager")
+
+      PlanCache.clear(s2)
+      assert(!CacheSlots.registered(seam), "the last holder's clear must drop the slot")
+      assert(!sc.getPersistentRDDs.contains(rdd), "the slot's persisted RDD must go with it")
+      assert(PlanCache.holdersOf(seam) == 0)
     } finally {
       PlanCache.clear(s1)
       PlanCache.clear(s2)
