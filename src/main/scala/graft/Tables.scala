@@ -88,16 +88,11 @@ object Tables {
 
   private val summaryFiles = Set("_common_metadata", "_metadata")
 
-  /** The files a table at `s` lists, by Spark's rule: below a directory,
-    * names starting with `.`, or with `_` outside a `k=v` partition
-    * directory, are skipped, except the summary files. */
+  /** The files a table at `s` lists, by Spark's listing rule. */
   private def leaves(fs: FileSystem, s: FileStatus): Seq[FileStatus] =
     if (!s.isDirectory) Seq(s)
-    else fs.listStatus(s.getPath).toSeq.filter { c =>
-      val n = c.getPath.getName
-      summaryFiles.exists(n.startsWith) ||
-        !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_"))
-    }.flatMap(leaves(fs, _))
+    else fs.listStatus(s.getPath).toSeq.filter(c => footers.listed(c.getPath.getName))
+      .flatMap(leaves(fs, _))
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,6 +10,7 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf0001 = "/root/testdata/sf0.001"
   val sf001  = "/root/testdata/sf0.01"
+  val sf01   = Paths.get(sf001).resolveSibling("sf0.1").toString
 
   /** A fresh temp directory, deleted when the suite JVM exits. */
   def tempDir(prefix: String): Path = SparkSpec.tempDir(prefix)

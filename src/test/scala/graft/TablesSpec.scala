@@ -134,7 +134,7 @@ class TablesSpec extends SparkSpec {
   }
 
   test("pinned schemas equal Spark's inferred schemas for every table and scale") {
-    for (dir <- Seq(sf0001, sf001, "/root/testdata/sf0.1"); name <- tables) {
+    for (dir <- Seq(sf0001, sf001, sf01); name <- tables) {
       val s = spark.newSession()
       try assertParity(s, dir, name) finally PlanCache.clear(s)
     }
